@@ -102,7 +102,7 @@ def _bgp_seminaive(ex_all: Executor, ex_delta: Executor, premise: list) -> DataF
         for j, (s, p, o) in enumerate(premise):
             src = ex_delta if j == i else ex_all
             pat = src._pattern_df(s, p, o, None)
-            df = pat if df is None else ex_all._join_bindings(df, pat)
+            df = pat if df is None else ex_all._compat_join(df, pat)
         out = df if out is None else out.unionByName(df)
     return out
 

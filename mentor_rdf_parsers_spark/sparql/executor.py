@@ -5,24 +5,33 @@ The layer the reference does NOT have (its SPARQL module is parse-only,
 DataFrame plans over the engine's `triples` table, following the mapping
 table in SURVEY.md §2.B:
 
-    BGP                → self-joins of `triples` on shared variables
-    OPTIONAL           → left outer join
+    BGP                → _compat_join(inner) of triple-pattern scans
+    OPTIONAL           → _compat_join(left)
     UNION              → unionByName(allowMissingColumns)
-    MINUS              → left anti join on shared vars
-    FILTER (NOT) EXISTS→ left semi / left anti join
+    MINUS              → _compat_join(minus)
+    FILTER (NOT) EXISTS→ _compat_join(semi / anti)
     FILTER expr        → where()
     BIND               → withColumn
-    VALUES             → createDataFrame + join (broadcast)
-    GRAPH              → filter/bind on the `g` column
+    VALUES             → createDataFrame + _compat_join
+    GRAPH <iri>        → filter on the `g` column
+    GRAPH ?var         → internal `__g` column, bound to ?var at exit
     GROUP BY + aggs    → groupBy().agg()
-    ORDER/LIMIT/OFFSET → orderBy / limit / row_number window
+    ORDER/LIMIT/OFFSET → orderBy / offset / limit (row_number per `__g`)
     property paths     → join chains; +/* via operators.paths closure
 
 Solution bindings are carried as one struct column per variable:
 ``struct<kind string, v string, lang string, dt string>`` with ''
 sentinels for absent lang/dt (struct equality with embedded NULLs would
-poison join keys). Catalyst prunes and reorders the joins; every join
-here is an equi-join on struct columns.
+poison join keys); an unbound variable is a NULL struct. Every join of
+solutions goes through `_compat_join`, which keeps a plain equi-join on
+the shared variables unless one of them can be NULL.
+
+Inside GRAPH ?var the active graph travels as an internal TERM column
+`__g`: scans emit it, `_unit` yields one empty solution per named
+graph, and every join, path, EXISTS, MINUS and subselect modifier
+treats it as one more never-NULL shared key, so everything inside the
+GRAPH is evaluated per graph. The GRAPH node binds (or constrains) the
+user variable from `__g` and drops it.
 
 Scale notes: triple-pattern scans push constant s/p/o filters down to
 the storage scan (predicate pushdown visible in `.explain`); selective
@@ -33,6 +42,7 @@ transitive closure from operators.paths.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import Optional
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -56,6 +66,13 @@ TERM = StructType(
         StructField("dt", StringType(), False),
     ]
 )
+
+# active-graph column, and the graph context that emits it (GRAPH ?var)
+G = "__g"
+NAMED = ("named",)
+
+_SPARK_HOW = {"inner": "inner", "left": "left", "semi": "left_semi",
+              "anti": "left_anti", "minus": "left_anti"}
 
 _NUMERIC_DTS = {
     XSD + "integer", XSD + "decimal", XSD + "double", XSD + "float",
@@ -209,6 +226,19 @@ def _tripleterm_component(t: Column, pos: int) -> Column:
     )
 
 
+def _gcols(df: DataFrame) -> list:
+    """`[G]` when `df` carries the active graph, else `[]`."""
+    return [G] if G in df.columns else []
+
+
+def _edges(t: DataFrame, inverse: bool = False) -> DataFrame:
+    """Triple rows → (__src, __dst[, __g]) term pairs."""
+    s = _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None))
+    o = _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt"))
+    src, dst = (o, s) if inverse else (s, o)
+    return t.select(src.alias("__src"), dst.alias("__dst"), *_gcols(t))
+
+
 class Executor:
     """Compiles one parsed query against a triples DataFrame.
 
@@ -236,14 +266,16 @@ class Executor:
     def _scan(self, graph: Optional[object]) -> DataFrame:
         """Base scan with graph context applied.
 
-        graph=None → default graph (g IS NULL); ('var', name) → named
-        graphs, g bound; ('iri', v) → that named graph."""
+        graph=None → default graph (g IS NULL); ('iri', v) → that named
+        graph; NAMED → every named graph, tagged with its name in `__g`."""
         t = self.triples
         if graph is None:
             return t.where(F.col("g").isNull())
-        if graph[0] == "iri":
-            return t.where(F.col("g") == graph[1])
-        return t.where(F.col("g").isNotNull())
+        if graph == NAMED:
+            return t.where(F.col("g").isNotNull()).withColumn(G, _term_struct(
+                F.coalesce(F.col("g_kind"), F.lit("iri")), F.col("g"),
+                F.lit(None), F.lit(None)))
+        return t.where(F.col("g") == graph[1])
 
     def _pattern_df(self, s, p, o, graph) -> DataFrame:
         """One triple pattern → DataFrame of variable bindings."""
@@ -282,25 +314,15 @@ class Executor:
         bind(s, F.col("s_kind"), F.col("s"), F.lit(None).cast("string"), F.lit(None).cast("string"))
         bind(p, F.col("p_kind"), F.col("p"), F.lit(None).cast("string"), F.lit(None).cast("string"))
         bind(o, F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt"))
-        if graph is not None and graph[0] == "var":
-            gstruct = _term_struct(
-                F.coalesce(F.col("g_kind"), F.lit("iri")), F.col("g"),
-                F.lit(None).cast("string"), F.lit(None).cast("string"),
-            )
-            if graph[1] in proj:
-                # GRAPH ?a { ?a … }: the variable names both the graph
-                # and a pattern slot — constrain, don't overwrite (same
-                # repeated-variable class the round-5 fuzz caught in
-                # patterns and paths)
-                cond.append(proj[graph[1]] == gstruct)
-            else:
-                proj[graph[1]] = gstruct
         for c in cond:
             t = t.where(c)
         if not proj:
-            # all-constant pattern: keep existence as a single marker row
+            # all-constant pattern: an existence gate, one empty
+            # solution (per matching graph under GRAPH ?var)
+            if G in t.columns:
+                return t.select(G).distinct()
             return t.select(F.lit(1).alias("__exists")).limit(1)
-        return t.select([c.alias(n) for n, c in proj.items()])
+        return t.select([c.alias(n) for n, c in proj.items()] + _gcols(t))
 
     def _path_df(self, s, path, o, graph) -> DataFrame:
         """Property-path pattern → (start, end) bindings joined to s/o."""
@@ -321,31 +343,31 @@ class Executor:
             df = df.where(F.col("__src") == _const_term(s))
         if o[0] != "var":
             df = df.where(F.col("__dst") == _const_term(o))
-        if not out_cols:
+        cols = [c.alias(n) for n, c in out_cols.items()] + _gcols(df)
+        if not cols:
             # both endpoints constant: μ0 multiplicity = number of path
             # matches (e.g. `<s> <p>/<q> <o>` with two intermediates is
             # μ0 × 2 per the spec's fresh-middle-variable translation) —
-            # no limit(1) here, _join_bindings multiplies rows through
+            # no limit(1) here, _compat_join multiplies rows through
             return df.select(F.lit(1).alias("__exists"))
-        return df.select([c.alias(n) for n, c in out_cols.items()])
+        return df.select(cols)
 
     def _edge_df(self, pred_iri: str, graph) -> DataFrame:
-        t = self._scan(graph).where(
+        return _edges(self._scan(graph).where(
             (F.col("p_kind") == "iri") & (F.col("p") == pred_iri)
-        )
-        return t.select(
-            _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__src"),
-            _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__dst"),
-        )
+        ))
 
     def _path_pairs(self, path, graph) -> DataFrame:
+        """Path → (__src, __dst[, __g]) pairs; under GRAPH ?var every
+        step, join and closure stays within one graph via `__g`."""
         if isinstance(path, tuple):  # plain iri predicate
             return self._edge_df(path[1], graph)
         op = path["path"]
         if op == "inv":
             inner = self._path_pairs(path["inner"], graph)
             return inner.select(
-                F.col("__dst").alias("__src"), F.col("__src").alias("__dst")
+                F.col("__dst").alias("__src"), F.col("__src").alias("__dst"),
+                *_gcols(inner),
             )
         if op == "seq":
             # spec §18.4 translates X (P/Q) Y to a join over a fresh
@@ -355,10 +377,11 @@ class Executor:
             # (round-5 differential fuzz vs the naive evaluator)
             left = self._path_pairs(path["left"], graph)
             right = self._path_pairs(path["right"], graph)
+            g = _gcols(left)
             return (
-                left.alias("l")
-                .join(right.alias("r"), F.col("l.__dst") == F.col("r.__src"))
-                .select(F.col("l.__src").alias("__src"), F.col("r.__dst").alias("__dst"))
+                left.withColumnRenamed("__dst", "__m")
+                .join(right.withColumnRenamed("__src", "__m"), ["__m", *g])
+                .select("__src", "__dst", *g)
             )
         if op == "alt":
             # bag union per spec (UNION of the two translations)
@@ -370,136 +393,180 @@ class Executor:
             t = self._scan(graph).where(F.col("p_kind") == "iri")
             fwd_excl = [e["iri"][1] for e in path["set"] if not e["inv"]]
             inv_excl = [e["iri"][1] for e in path["set"] if e["inv"]]
-            parts = []
-            if fwd_excl or not inv_excl:
-                fwd = t.where(~F.col("p").isin(fwd_excl) if fwd_excl else F.lit(True))
-                parts.append(fwd.select(
-                    _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__src"),
-                    _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__dst"),
-                ))
-            if inv_excl:
-                inv = t.where(~F.col("p").isin(inv_excl))
-                parts.append(inv.select(
-                    _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__src"),
-                    _term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__dst"),
-                ))
             # one solution per matching TRIPLE (multiset): two different
             # non-excluded predicates linking the same (s, o) are two rows
-            out = parts[0]
-            for p_ in parts[1:]:
-                out = out.union(p_)
-            return out
+            parts = []
+            if fwd_excl or not inv_excl:
+                parts.append(_edges(t.where(
+                    ~F.col("p").isin(fwd_excl) if fwd_excl else F.lit(True))))
+            if inv_excl:
+                parts.append(_edges(t.where(~F.col("p").isin(inv_excl)),
+                                    inverse=True))
+            return parts[0] if len(parts) == 1 else parts[0].union(parts[1])
         if op == "mod":
             inner = self._path_pairs(path["inner"], graph)
+            g = _gcols(inner)
             if path["mod"] == "?":
                 nodes = self._all_nodes(graph)
                 return inner.union(nodes.select(F.col("__n").alias("__src"),
-                                                F.col("__n").alias("__dst"))).distinct()
+                                                F.col("__n").alias("__dst"),
+                                                *g)).distinct()
+            # node ids hash the term together with its graph, so one
+            # closure run over every named graph never crosses graphs
             closure = transitive_closure(
-                inner.select(F.xxhash64(F.to_json("__src")).alias("src"),
-                             F.xxhash64(F.to_json("__dst")).alias("dst"))
+                inner.select(F.xxhash64(F.to_json("__src"), *g).alias("src"),
+                             F.xxhash64(F.to_json("__dst"), *g).alias("dst"))
             )
             # map hashed ids back to terms
             nodes = (
-                inner.select(F.col("__src").alias("__n"))
-                .union(inner.select(F.col("__dst")))
+                inner.select(F.col("__src").alias("__n"), *g)
+                .union(inner.select(F.col("__dst"), *g))
                 .distinct()
-                .withColumn("__id", F.xxhash64(F.to_json("__n")))
+                .withColumn("__id", F.xxhash64(F.to_json("__n"), *g))
             )
             pairs = (
                 closure.join(nodes.select(F.col("__id").alias("src"),
-                                          F.col("__n").alias("__src")), "src")
+                                          F.col("__n").alias("__src"), *g), "src")
                 .join(nodes.select(F.col("__id").alias("dst"),
                                    F.col("__n").alias("__dst")), "dst")
-                .select("__src", "__dst")
+                .select("__src", "__dst", *g)
             )
             if path["mod"] == "*":
                 all_nodes = self._all_nodes(graph)
-                pairs = pairs.union(
-                    all_nodes.select(F.col("__n").alias("__src"), F.col("__n").alias("__dst"))
-                ).distinct()
+                pairs = pairs.union(all_nodes.select(
+                    F.col("__n").alias("__src"), F.col("__n").alias("__dst"), *g
+                )).distinct()
             return pairs
         raise SparqlExecutionError(f"unsupported path {path!r}")
 
     def _all_nodes(self, graph) -> DataFrame:
-        t = self._scan(graph)
+        e = _edges(self._scan(graph))
+        g = _gcols(e)
         return (
-            t.select(_term_struct(F.col("s_kind"), F.col("s"), F.lit(None), F.lit(None)).alias("__n"))
-            .union(t.select(_term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt")).alias("__n")))
+            e.select(F.col("__src").alias("__n"), *g)
+            .union(e.select("__dst", *g))
             .distinct()
         )
 
     # ------------------------------------------------------------- patterns
-    def _join_bindings(self, left: DataFrame, right: DataFrame, how: str = "inner") -> DataFrame:
-        shared = [c for c in left.columns if c in right.columns and not c.startswith("__")]
-        lx = left.drop("__exists") if "__exists" in left.columns else left
-        rx = right.drop("__exists") if "__exists" in right.columns else right
-        # A bindings-free frame is a MULTISET OF EMPTY SOLUTIONS — k rows
-        # = μ0 with multiplicity k (an all-constant pattern is a 0-or-1
-        # row existence gate; a UNION of two matching gates is μ0 × 2).
-        # Joining multiplies multiplicities, so zero rows annihilate an
-        # inner join (never act as identity) and m rows replicate the
-        # other side m times; a left join keeps left rows when the right
-        # is empty. A join on TRUE has exactly these semantics for both
-        # `inner` and `left`, so the `how` passes straight through.
-        # (The round-5 differential fuzz caught both the old
-        # `return other side` shortcut — `<s> <p> <o> .` matching
-        # nothing was a no-op — and a limit(1) here that collapsed
-        # union multiplicities.)
-        if not lx.columns and not rx.columns:
-            return (
-                left.select(F.lit(1).alias("__exists"))
-                .join(right.select(F.lit(1).alias("__e2")),
-                      F.lit(True), how)
-                .select(F.lit(1).alias("__exists"))
-            )
-        if not lx.columns:
-            gate = left.select(F.lit(1).alias("__gate"))
-            return gate.join(rx, F.lit(True), how).drop("__gate")
-        if not rx.columns:
-            gate = right.select(F.lit(1).alias("__gate"))
-            return lx.join(gate, F.lit(True), how).drop("__gate")
-        if shared:
-            # SPARQL compatible-join: an UNBOUND (NULL) shared variable is
-            # compatible with any binding and the merged solution takes the
-            # bound side. Plain equi-joins are null-unsafe and would drop
-            # such solutions. Shared vars can only be unbound when they came
-            # through OPTIONAL / UNION-with-missing-branch — exactly the
-            # cases where Spark marks the column nullable — so the common
-            # all-bound case keeps the fast hashable equi-join and only
-            # nullable shared vars pay the condition-join.
-            nullable = [
-                c for c in shared
-                if lx.schema[c].nullable or rx.schema[c].nullable
-            ]
-            if not nullable:
-                return lx.join(rx, on=shared, how=how)
-            L, R = lx.alias("__L"), rx.alias("__R")
-            cond = None
-            for c in shared:
-                lc, rc = F.col(f"__L.`{c}`"), F.col(f"__R.`{c}`")
-                cc = (
-                    (lc.isNull() | rc.isNull() | (lc == rc))
-                    if c in nullable else (lc == rc)
-                )
-                cond = cc if cond is None else cond & cc
-            out = L.join(R, cond, how)
-            cols = [
-                (F.coalesce(F.col(f"__L.`{c}`"), F.col(f"__R.`{c}`")).alias(c)
-                 if c in shared else F.col(f"__L.`{c}`").alias(c))
-                for c in lx.columns
-            ] + [F.col(f"__R.`{c}`").alias(c) for c in rx.columns if c not in shared]
-            return out.select(*cols)
-        if how == "inner":
-            return lx.crossJoin(rx)
+    def _unit(self, graph=None) -> DataFrame:
+        """{μ0}, the join identity: one empty solution — one per named
+        graph (as `__g`) under GRAPH ?var."""
+        if graph == NAMED:
+            return self._scan(NAMED).select(G).distinct()
+        return self.spark.range(1).select(F.lit(1).alias("__exists"))
+
+    def _compat_join(self, left: DataFrame, right: DataFrame,
+                     how: str = "inner") -> DataFrame:
+        """SPARQL's join of compatible solutions, in five modes: `inner`
+        (BGP and group joins), `left` (OPTIONAL), `semi` / `anti`
+        (FILTER EXISTS / NOT EXISTS over pattern bodies, where §18.6
+        substitution equals compatibility) and `minus` (§18.5, which
+        also needs a shared variable bound on both sides).
+
+        Two solutions are compatible when every shared variable is equal
+        or UNBOUND (NULL) on either side; the merged solution takes the
+        bound value. `__g` is shared like a variable but is never NULL.
+
+        A bindings-free frame (only the `__exists` marker) is a multiset
+        of empty solutions: k rows = μ0 × k. Joining multiplies
+        multiplicities, so zero rows annihilate an inner join and m rows
+        replicate the other side m times — a join on TRUE. (The round-5
+        differential fuzz caught both a `return other side` shortcut and
+        a limit(1) that collapsed union multiplicities.)
+        """
+        shared = [c for c in left.columns
+                  if c in right.columns and c != "__exists"]
+        if how == "minus" and not [c for c in shared if c != G]:
+            # dom(μ1) ∩ dom(μ2) = ∅: MINUS removes nothing
+            return left
+        if how in ("semi", "anti", "minus"):
+            # existence only: the right side shrinks to its distinct keys
+            right = right.select(shared).distinct() if shared else right.limit(1)
+        if not shared:
+            lv = [c for c in left.columns if c != "__exists"]
+            rv = [c for c in right.columns if c != "__exists"]
+            out = left.select(*lv or [F.lit(1).alias("__l")]).join(
+                right.select(*rv or [F.lit(1).alias("__r")]),
+                F.lit(True), _SPARK_HOW[how])
+            cols = lv if how in ("semi", "anti") else lv + rv
+            return out.select(*cols) if cols else out.select(
+                F.lit(1).alias("__exists"))
+
+        left, right = left.drop("__exists"), right.drop("__exists")
+        nullable = [c for c in shared
+                    if left.schema[c].nullable or right.schema[c].nullable]
+        if not nullable:
+            return left.join(right, shared, _SPARK_HOW[how])
         if how == "left":
-            # OPTIONAL with no shared vars: cross product when the right
-            # side has rows, but left rows MUST survive an empty right
-            # (a crossJoin would drop them) → left join on TRUE
-            return lx.join(rx, F.lit(True), "left")
-        raise SparqlExecutionError(f"join {how} without shared vars")
+            return self._compat_join(left, right, "inner").unionByName(
+                self._compat_join(left, right, "anti"),
+                allowMissingColumns=True)
+
+        # Split each side into rows with every shared variable bound and
+        # rows with some NULL. The all-bound pair is an equi-join; only
+        # rows that carry a NULL meet the NULL-tolerant condition.
+        def split(df):
+            bound = [F.col(f"`{c}`").isNotNull()
+                     for c in nullable if df.schema[c].nullable]
+            if not bound:
+                return df, None
+            b = reduce(lambda x, y: x & y, bound)
+            return df.where(b), df.where(~b)
+
+        def L(c):
+            return F.col(f"__L.`{c}`")
+
+        def R(c):
+            return F.col(f"__R.`{c}`")
+
+        cond = reduce(lambda x, y: x & y, [
+            (L(c) == R(c)) | L(c).isNull() | R(c).isNull()
+            if c in nullable else L(c) == R(c)
+            for c in shared
+        ])
+        if how == "minus":
+            cond = cond & reduce(lambda x, y: x | y, [
+                L(c).isNotNull() & R(c).isNotNull()
+                for c in shared if c != G
+            ])
+
+        def tolerant(a, b, h):
+            out = a.alias("__L").join(b.alias("__R"), cond, _SPARK_HOW[h])
+            if h != "inner":
+                return out
+            return out.select(
+                *[F.coalesce(L(c), R(c)).alias(c) if c in shared
+                  else L(c).alias(c) for c in a.columns],
+                *[R(c).alias(c) for c in b.columns if c not in shared])
+
+        lb, ln = split(left)
+        rb, rn = split(right)
+        if how == "inner":
+            out = lb.join(rb, shared)
+            if rn is not None:
+                out = out.unionByName(tolerant(lb, rn, "inner"))
+        else:
+            hit = lb.join(rb, shared, "left_semi")
+            out = lb.join(rb, shared, "left_anti")
+            if rn is not None:
+                hit = hit.unionByName(tolerant(out, rn, "semi"))
+                out = tolerant(out, rn, "anti")
+            if how == "semi":
+                out = hit
+        if ln is not None:
+            out = out.unionByName(tolerant(ln, right, how))
+        return out
 
     def _compile_pattern(self, node, graph) -> DataFrame:
+        df = self._compile(node, graph)
+        if graph == NAMED and G not in df.columns:
+            # graph-independent solutions (VALUES, SERVICE, an inner
+            # GRAPH) hold in every named graph
+            df = self._compat_join(df, self._unit(NAMED))
+        return df
+
+    def _compile(self, node, graph) -> DataFrame:
         t = node["type"]
         if t == "bgp":
             # join-order heuristic: most-constant patterns first (smallest
@@ -520,123 +587,73 @@ class Executor:
                     pat = self._path_df(s, p, o, graph)
                 else:
                     pat = self._pattern_df(s, p, o, graph)
-                df = pat if df is None else self._join_bindings(df, pat)
-            if df is None:
-                return self.spark.range(1).select(F.lit(1).alias("__exists"))
-            return df
+                df = pat if df is None else self._compat_join(df, pat)
+            return self._unit(graph) if df is None else df
+        if t in ("optional", "minus", "bind", "filter"):
+            # the parser collapses one-element groups, so these arrive
+            # bare: evaluate as the group they came from (a bare OPTIONAL
+            # over no match is ONE solution with every variable unbound,
+            # a bare MINUS is {μ0} — round-5 differential fuzz)
+            return self._compile({"type": "group", "patterns": [node]}, graph)
         if t == "group":
             df = None
             filters = []
             for sub in node["patterns"]:
-                if sub["type"] == "filter":
+                kind = sub["type"]
+                if kind == "filter":
                     filters.append(sub["expr"])
+                elif kind == "minus" and df is None:
+                    # Minus({μ0}, Ω) = {μ0}: the empty solution's domain
+                    # never overlaps any μ2, so a MINUS that opens a
+                    # group removes nothing (spec §18.5) — don't even
+                    # evaluate the right side
                     continue
-                if sub["type"] == "optional":
+                elif kind in ("optional", "minus"):
                     inner = self._compile_pattern(sub["pattern"], graph)
-                    base = df if df is not None else self.spark.range(1).select(
-                        F.lit(1).alias("__exists"))
-                    df = self._join_bindings(base, inner, "left")
-                    continue
-                if sub["type"] == "minus":
+                    df = self._compat_join(
+                        self._unit(graph) if df is None else df, inner,
+                        "left" if kind == "optional" else "minus")
+                elif kind == "bind":
                     if df is None:
-                        # Minus({μ0}, Ω) = {μ0}: the empty solution's
-                        # domain never overlaps any μ2, so a MINUS that
-                        # opens a group removes nothing (spec §18.5) —
-                        # don't even evaluate the right side
-                        continue
-                    inner = self._compile_pattern(sub["pattern"], graph)
-                    shared = [c for c in df.columns
-                              if c in inner.columns and not c.startswith("__")]
-                    if shared:
-                        nullable = [c for c in shared
-                                    if df.schema[c].nullable or inner.schema[c].nullable]
-                        rsub = inner.select(shared).distinct()
-                        if not nullable:
-                            df = df.join(rsub, on=shared, how="left_anti")
-                        else:
-                            # spec MINUS: drop μ1 iff ∃μ2 compatible (per-var
-                            # NULL-tolerant equality) AND dom(μ1)∩dom(μ2)≠∅
-                            # (at least one shared var bound on BOTH sides)
-                            L, R = df.alias("__L"), rsub.alias("__R")
-                            compat, overlap = None, None
-                            for c in shared:
-                                lc, rc = F.col(f"__L.`{c}`"), F.col(f"__R.`{c}`")
-                                cc = lc.isNull() | rc.isNull() | (lc == rc)
-                                ov = lc.isNotNull() & rc.isNotNull()
-                                compat = cc if compat is None else compat & cc
-                                overlap = ov if overlap is None else overlap | ov
-                            df = L.join(R, compat & overlap, "left_anti")
-                    continue
-                if sub["type"] == "bind":
-                    if df is None:
-                        df = self.spark.range(1).select(F.lit(1).alias("__exists"))
-                    df = df.withColumn(sub["var"], self._expr_term(sub["expr"], df))
-                    if "__exists" in df.columns:
-                        df = df.drop("__exists")
-                    continue
-                if sub["type"] == "values" and df is not None:
+                        df = self._unit(graph)
+                    df = df.withColumn(
+                        sub["var"], self._expr_term(sub["expr"], df)
+                    ).drop("__exists")
+                elif kind == "values" and df is not None:
                     df = self._apply_values(df, sub)
-                    continue
-                inner = self._compile_pattern(sub, graph)
-                df = inner if df is None else self._join_bindings(df, inner)
+                else:
+                    inner = self._compile_pattern(sub, graph)
+                    df = inner if df is None else self._compat_join(df, inner)
             if df is None:
-                df = self.spark.range(1).select(F.lit(1).alias("__exists"))
+                df = self._unit(graph)
             for fexpr in filters:
                 df = self._apply_filter(df, fexpr, graph)
             return df
-        if t == "optional":
-            # a bare OPTIONAL (the parser collapses one-element groups, so
-            # `{ OPTIONAL { P } }` arrives without its group wrapper) is
-            # LeftJoin(unit, P): when P matches nothing the result is ONE
-            # solution with every variable unbound, not zero solutions
-            # (round-5 differential fuzz vs the naive evaluator)
-            unit = self.spark.range(1).select(F.lit(1).alias("__exists"))
-            inner = self._compile_pattern(node["pattern"], graph)
-            return self._join_bindings(unit, inner, "left")
         if t == "union":
             left = self._compile_pattern(node["left"], graph)
             right = self._compile_pattern(node["right"], graph)
             return left.unionByName(right, allowMissingColumns=True)
-        if t == "filter":
-            base = self.spark.range(1).select(F.lit(1).alias("__exists"))
-            return self._apply_filter(base, node["expr"], graph)
         if t == "graph":
-            inner = self._compile_pattern(node["pattern"], node["name"])
             name = node["name"]
-            if name is not None and name[0] == "var":
-                # Graph(var, P) = ⋃ over named graphs g of
-                # Join(eval(D[g], P), {var→g}).  Patterns inside P bind
-                # the var per matched row, but pattern-free P (a BIND/
-                # VALUES/filter-only group) binds nothing, and UNION
-                # arms without patterns carry NULL — join with the
-                # DISTINCT named-graph names so those rows multiply
-                # over the graphs while bound rows pass through ×1 (the
-                # compat join treats NULL as wildcard and keeps the
-                # bound side).  The names frame is tiny → broadcast.
-                # (Round-5 differential fuzz.)
-                names = (
-                    self.triples.where(F.col("g").isNotNull())
-                    .select(_term_struct(
-                        F.coalesce(F.col("g_kind"), F.lit("iri")),
-                        F.col("g"),
-                        F.lit(None).cast("string"),
-                        F.lit(None).cast("string"),
-                    ).alias(name[1]))
-                    .distinct()
-                )
-                inner = self._join_bindings(inner, names)
-            return inner
+            if name[0] != "var":
+                return self._compile_pattern(node["pattern"], name)
+            # Graph(?v, P) = ⋃ over named graphs g of
+            # Join(eval(D[g], P), {?v→g}): P runs once over all named
+            # graphs with g in `__g`; ?v, when P bound it too (GRAPH ?a
+            # { ?a … }), must agree with g.
+            inner = self._compile_pattern(node["pattern"], NAMED)
+            v = self._col(inner, name[1])
+            return (
+                inner.where(v.isNull() | (v == F.col(G)))
+                .withColumn(name[1], F.col(G))
+                .drop(G)
+            )
         if t == "values":
             return self._values_df(node)
         if t == "subselect":
             # a subquery inherits the active graph (§13.3.1: GRAPH sets
             # the context for everything inside, subselects included)
-            return self._run_select(node["query"], keep_structs=True,
-                                    graph=graph)
-        if t == "minus":
-            # parser collapses one-element groups, so `{ MINUS { P } }`
-            # can arrive bare: Minus({μ0}, Ω) = {μ0} (see group handling)
-            return self.spark.range(1).select(F.lit(1).alias("__exists"))
+            return self._run_select(node["query"], graph=graph)
         if t == "service":
             # Federation-lite (r5): a SERVICE IRI resolves against the
             # locally registered dataset map (Executor(services={iri:
@@ -655,7 +672,7 @@ class Executor:
             if node.get("silent"):
                 # SERVICE SILENT over an unreachable endpoint yields the
                 # single empty solution (identity for the join)
-                return self.spark.range(1).select(F.lit(1).alias("__exists"))
+                return self._unit(graph)
             if name[0] != "iri":
                 raise SparqlExecutionError(
                     "SERVICE with a variable endpoint is not supported"
@@ -665,15 +682,6 @@ class Executor:
                 f"dataset (pass services={{iri: triples_df}}); remote "
                 f"federation is out of scope"
             )
-        if t == "bind":
-            # parser collapses one-element groups, so `{ BIND(e AS ?v) }`
-            # can arrive bare: Extend({μ0}, v, e) — one solution, with v
-            # unbound when the expression errors (same collapse class as
-            # bare OPTIONAL/MINUS; round-5 differential fuzz)
-            unit = self.spark.range(1).select(F.lit(1).alias("__exists"))
-            return unit.withColumn(
-                node["var"], self._expr_term(node["expr"], unit)
-            ).drop("__exists")
         raise SparqlExecutionError(f"unsupported pattern {t}")
 
     def _values_df(self, node) -> DataFrame:
@@ -723,7 +731,7 @@ class Executor:
                 outs.extend(df for _ in rows)
                 continue
             vdf = self._values_df({"vars": list(mask), "rows": rows})
-            outs.append(self._join_bindings(df, vdf))
+            outs.append(self._compat_join(df, vdf))
         if not outs:
             return df.limit(0)
         res = outs[0]
@@ -733,35 +741,13 @@ class Executor:
 
     def _apply_filter(self, df: DataFrame, expr, graph) -> DataFrame:
         if isinstance(expr, dict) and expr.get("op") == "exists":
+            # §18.6 substitution over a pattern body = compatibility: an
+            # outer variable left UNBOUND stays free in the substituted
+            # pattern, an inner one unbound matches any outer value.
+            # Without shared variables this is a lazy join against
+            # inner.limit(1) (per graph under GRAPH ?var, via `__g`).
             inner = self._compile_pattern(expr["pattern"], graph)
-            shared = [c for c in df.columns
-                      if c in inner.columns and not c.startswith("__")]
-            how = "left_anti" if expr["neg"] else "left_semi"
-            if shared:
-                rx = inner.select(shared).distinct()
-                # §18.6 substitution semantics: a row whose shared var is
-                # UNBOUND (NULL, e.g. out of an OPTIONAL) leaves that
-                # variable FREE in the substituted pattern — it matches
-                # ANY inner binding, so plain equality (which drops NULL
-                # keys, and under left_anti wrongly KEEPS the row) is
-                # wrong. Split so the all-bound majority still plans as
-                # an equi semi/anti join (the 100 TB path) and only the
-                # some-unbound residual pays the compat (NULL-is-
-                # wildcard) non-equi join.  (Round-5 differential fuzz.)
-                any_null = F.lit(False)
-                for c in shared:
-                    any_null = any_null | F.col(c).isNull()
-                bound = df.where(~any_null).join(rx, on=shared, how=how)
-                resid = df.where(any_null)
-                li, ri = resid.alias("__exl"), rx.alias("__exr")
-                cond = F.lit(True)
-                for c in shared:
-                    lc, rc = F.col(f"__exl.{c}"), F.col(f"__exr.{c}")
-                    cond = cond & (lc.isNull() | (lc == rc))
-                return bound.unionByName(li.join(ri, cond, how))
-            has = inner.limit(1).count() > 0
-            keep = (not has) if expr["neg"] else has
-            return df if keep else df.limit(0)
+            return self._compat_join(df, inner, "anti" if expr["neg"] else "semi")
         return df.where(self._expr_bool(expr, df))
 
     # ---------------------------------------------------------- expressions
@@ -1141,35 +1127,29 @@ class Executor:
         raise SparqlExecutionError(f"unsupported aggregate {name}")
 
     # ------------------------------------------------------------- queries
-    def _run_select(self, q, keep_structs: bool, graph=None) -> DataFrame:
+    def _run_select(self, q, graph=None) -> DataFrame:
         df = self._compile_pattern(q["where"], graph)
         if q.get("values"):
             vdf = self._values_df(q["values"])
-            df = self._join_bindings(df, vdf)
+            df = self._compat_join(df, vdf)
         mods = q.get("modifiers", {})
         proj = q["projection"]
-
-        # a subselect under GRAPH ?var evaluates PER NAMED GRAPH
-        # (§13.3): its projection must keep the graph variable so the
-        # outer join stays correlated to the active graph — dropping it
-        # silently cross-joined rows from ALL graphs (round-5 soak
-        # fuzz).  DISTINCT then dedups (row, graph) = per-graph
-        # distinct, and aggregates group per graph, as the spec's
-        # union-over-graphs requires.
-        gcarry = None
-        if graph is not None and graph[0] == "var" and graph[1] in df.columns:
-            gcarry = graph[1]
+        # a subselect under GRAPH ?var evaluates PER NAMED GRAPH (§13.3):
+        # `__g` rides through the projection, so DISTINCT, GROUP BY and
+        # the ORDER BY/LIMIT/OFFSET slice all partition by graph and the
+        # outer join stays correlated to the active graph
+        g = _gcols(df)
 
         group_by = mods.get("group_by")
         has_agg = any(p[0] == "expr" and _has_agg(p[1]) for p in proj if proj != "*")
         if group_by or has_agg:
             keys = []
-            for g in group_by or []:
-                if g[0] == "var":
-                    keys.append(g[1])
+            for gb in group_by or []:
+                if gb[0] == "var":
+                    keys.append(gb[1])
                 else:
-                    alias = g[2] or self._fresh()
-                    df = df.withColumn(alias, self._expr_term(g[1], df))
+                    alias = gb[2] or self._fresh()
+                    df = df.withColumn(alias, self._expr_term(gb[1], df))
                     keys.append(alias)
             aggs = []
             out_names = []
@@ -1184,52 +1164,50 @@ class Executor:
                     expr, alias = p[1], p[2]
                     aggs.append(self._agg_expr_struct(expr, df).alias(alias))
                     out_names.append(alias)
-            if gcarry and gcarry not in keys:
-                keys.append(gcarry)
-                out_names.append(gcarry)
+            keys += g
             gdf = df.groupBy(*[F.col(k) for k in keys]) if keys else df.groupBy()
             df = gdf.agg(*aggs) if aggs else gdf.agg(F.count("*").alias("__n")).drop("__n")
             for h in mods.get("having", []):
                 df = df.where(self._expr_bool(h, df))
-            df = df.select(*[F.col(n) for n in out_names])
+            df = df.select(*[F.col(n) for n in out_names + g])
         else:
             if proj == "*":
                 cols = [c for c in df.columns if not c.startswith("__") and not c.startswith("?")]
-                df = df.select(*cols) if cols else df
+                df = df.select(*cols, *g) if cols else df
             else:
                 sel = []
-                names = set()
                 for p in proj:
                     if p[0] == "var":
                         sel.append(self._col(df, p[1]).alias(p[1]))
-                        names.add(p[1])
                     else:
                         sel.append(self._expr_term(p[1], df).alias(p[2]))
-                        names.add(p[2])
-                if gcarry and gcarry not in names:
-                    sel.append(F.col(gcarry).alias(gcarry))
-                df = df.select(*sel)
+                df = df.select(*sel, *g)
 
         if q.get("distinct") or q.get("reduced"):
             df = df.dropDuplicates()
-        order = mods.get("order_by")
-        if order:
-            cols = []
-            for direction, expr in order:
-                if isinstance(expr, tuple) and expr[0] == "var" and expr[1] in df.columns:
-                    c = F.when(
-                        F.col(expr[1])["dt"].isin(*_NUMERIC_DTS),
-                        F.col(expr[1])["v"].cast("double"),
-                    ).otherwise(F.lit(None))
-                    c2 = F.col(expr[1])["v"]
-                    for base in (c, c2):
-                        cols.append(base.desc() if direction == "desc" else base.asc())
-                else:
-                    c = self._expr_term(expr, df)["v"]
-                    cols.append(c.desc() if direction == "desc" else c.asc())
-            df = df.orderBy(*cols)
-        offset = mods.get("offset")
+        order = []
+        for direction, expr in mods.get("order_by") or []:
+            if isinstance(expr, tuple) and expr[0] == "var" and expr[1] in df.columns:
+                c = F.when(
+                    F.col(expr[1])["dt"].isin(*_NUMERIC_DTS),
+                    F.col(expr[1])["v"].cast("double"),
+                ).otherwise(F.lit(None))
+                bases = (c, F.col(expr[1])["v"])
+            else:
+                bases = (self._expr_term(expr, df)["v"],)
+            order += [b.desc() if direction == "desc" else b.asc() for b in bases]
+        offset = mods.get("offset") or 0
         limit = mods.get("limit")
+        if g and (offset or limit is not None):
+            # the slice applies within each graph: number rows per `__g`
+            rn = F.row_number().over(
+                Window.partitionBy(G).orderBy(*order or [F.lit(1)]))
+            df = df.withColumn("__rn", rn).where(F.col("__rn") > offset)
+            if limit is not None:
+                df = df.where(F.col("__rn") <= offset + limit)
+            return df.drop("__rn")
+        if order:
+            df = df.orderBy(*order)
         if offset:
             # Native Offset node (Spark >= 3.4). With ORDER BY + LIMIT the
             # planner fuses sort/offset/limit into TakeOrderedAndProject
@@ -1260,7 +1238,7 @@ class Executor:
     def run(self, q) -> DataFrame:
         form = q["form"]
         if form == "select":
-            return self._run_select(q, keep_structs=True)
+            return self._run_select(q)
         if form == "ask":
             inner = Executor(self.triples, self.spark)
             df = inner._compile_pattern(q["where"], None)

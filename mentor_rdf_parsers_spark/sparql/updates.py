@@ -151,20 +151,21 @@ def execute_update(
             victims = _quads_df(spark, op["quads"], current.schema)
             current = _remove(current, victims)
         elif kind == "deletewhere":
+            # DELETE WHERE { QP } = DELETE { QP } WHERE { QP }: one group of
+            # the default-graph triples plus one GRAPH node per graph
+            # context, so GRAPH ?g binds ?g at its exit like any query
             ex = Executor(current, spark)
-            # GRAPH-scoped quads in DELETE WHERE: group by graph context.
-            # The context is the full term — ('iri', v) scopes to that
-            # graph, ('var', name) matches every named graph and the
-            # bound graph term flows into the victim quads.
-            graphs = {g if g else None for (_s, _p, _o, g) in op["quads"]}
-            victims = None
-            for gctx in graphs:
-                sub = [(s, p, o) for (s, p, o, g) in op["quads"]
-                       if (g if g else None) == gctx]
-                b = ex._compile_pattern({"type": "bgp", "triples": sub}, gctx)
-                v = _instantiate(ex, b, [(s, p, o, gctx) for (s, p, o) in sub])
-                victims = v if victims is None else victims.unionByName(v)
-            current = _remove(current, victims)
+            by_graph: dict = {}
+            for (s, p, o, g) in op["quads"]:
+                by_graph.setdefault(g, []).append((s, p, o))
+            where = []
+            for g, tps in by_graph.items():
+                bgp = {"type": "bgp", "triples": tps}
+                where.append(bgp if g is None else
+                             {"type": "graph", "name": g, "pattern": bgp})
+            bindings = ex._compile_pattern(
+                {"type": "group", "patterns": where}, None)
+            current = _remove(current, _instantiate(ex, bindings, op["quads"]))
         elif kind == "modify":
             using = op.get("using") or []
             if using:

@@ -23,6 +23,11 @@ sys.path.insert(0, str(REPO))
 
 REF = Path("/root/reference/src")
 
+# tests that read the reference checkout's W3C fixtures or sources
+HAVE_REFERENCE = REF.is_dir()
+requires_reference = pytest.mark.skipif(
+    not HAVE_REFERENCE, reason=f"needs {REF.parent}")
+
 _IT_RE = re.compile(r"it\('([+-]) ", re.S)
 _FIXTURE_RE = re.compile(r"file://\./(tests/[^']+)")
 _PAIR_RE = re.compile(
@@ -88,3 +93,18 @@ def spark():
         .getOrCreate()
     )
     yield spark
+
+
+@pytest.fixture(scope="session")
+def rdf_docs(spark):
+    """The rendered testdata corpus (`sources.testdata.
+    documents_as_rdf_docs`): mixed Turtle / N-Triples / N-Quads
+    documents with interleaved media spans, four triples per document —
+    the same corpus `__spark_entry__.entry` extracts."""
+    from __spark_entry__ import SF0001
+    from mentor_rdf_parsers_spark.sources.testdata import documents_as_rdf_docs
+
+    docs = documents_as_rdf_docs(spark, SF0001).persist()
+    docs.count()
+    yield docs
+    docs.unpersist()

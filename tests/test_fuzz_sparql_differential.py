@@ -7,12 +7,13 @@ the parsers to EXECUTION: hypothesis draws a random small graph and a
 random SELECT query over the algebra core — BGP joins, OPTIONAL
 (left-join), UNION, MINUS (§18.5 domain-overlap semantics), VALUES
 with UNDEF cells, FILTER (NOT) EXISTS (§18.6 substitution, incl.
-unbound-shared-variable wildcards), BIND/Extend (error → unbound),
+unbound-shared-variable wildcards on either side), BIND/Extend (error → unbound),
 subselects (projection scoping × DISTINCT multisets), nested groups,
 three-valued FILTER logic (BOUND / sameTerm / RDFterm-equal /
 isIRI-isLiteral-isBlank / numeric and string comparison, combined with
 && || !), projection subsets, DISTINCT, GROUP BY +
-COUNT(*/var/DISTINCT var), and property paths — renders it to SPARQL
+COUNT(*/var/DISTINCT var), and property paths (also inside GRAPH ?var,
+where every step stays in one graph) — renders it to SPARQL
 text, runs it through the full parse + Catalyst pipeline, and compares
 the result multiset against the naive evaluator's, shrinking any
 counterexample.  (The update surface has its own differential:
@@ -28,7 +29,7 @@ from __future__ import annotations
 import os
 
 import pytest
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from tests.naive_sparql import (
@@ -150,14 +151,20 @@ def values_element(draw):
     return ("values", vs, rows)
 
 
-# FILTER (NOT) EXISTS — inner groups restricted to plain patterns, where
-# §18.6 substitution == seeded evaluation (no inner filters that could
-# see outer bindings differently, no MINUS substitution wart); unbound
-# shared vars (via OPTIONAL upstream) exercise the NULL-is-wildcard
-# semi/anti-join split in the executor
+# FILTER (NOT) EXISTS — inner groups restricted to plain patterns and
+# UNIONs of them, where §18.6 substitution == seeded evaluation (no
+# inner filters that could see outer bindings differently, no MINUS
+# substitution wart); unbound shared vars — outer ones via OPTIONAL
+# upstream, inner ones via a UNION arm that never mentions the var —
+# exercise the NULL-is-wildcard semi/anti-join split in the executor
+pattern_list = st.lists(pattern_el, min_size=1, max_size=2)
 exists_el = st.builds(
     lambda pats, neg: ("filter", ("exists", pats, neg)),
-    st.lists(pattern_el, min_size=1, max_size=2),
+    st.lists(
+        st.one_of(pattern_el, st.builds(
+            lambda a, b: ("union", a, b), pattern_list, pattern_list)),
+        min_size=1, max_size=2,
+    ),
     st.booleans(),
 )
 
@@ -290,6 +297,10 @@ def render_group(elements) -> str:
     for el in elements:
         if el[0] == "pattern":
             parts.append(" ".join(sparql_token(t) for t in el[1]) + " .")
+        elif el[0] == "pathpattern":
+            _, s_slot, pth, o_slot = el
+            parts.append(f"{sparql_token(s_slot)} {sparql_path(pth)} "
+                         f"{sparql_token(o_slot)} .")
         elif el[0] == "optional":
             parts.append("OPTIONAL { " + render_group(el[1]) + " }")
         elif el[0] == "union":
@@ -388,7 +399,29 @@ def run_executor(spark, data, query, project):
 
 # --- the differential -------------------------------------------------------
 
+# pinned counterexamples (the hypothesis DB is not kept)
+_EX_S0, _EX_S1 = S_IRIS[:2]
+_EX_P0, _EX_P1, _EX_P2 = P_IRIS
+
+
+def _exists_union_arm_case(neg: bool):
+    """`?a <p0> ?b FILTER [NOT] EXISTS { { ?a <p1> ?c } UNION { ?d <p2>
+    ?c } }`: the second arm leaves the shared ?a unbound, so it matches
+    every outer row — an equi semi-join on ?a dropped its NULL key."""
+    els = [
+        ("pattern", (("var", "a"), _EX_P0, ("var", "b"))),
+        ("filter", ("exists", [("union",
+                                [("pattern", (("var", "a"), _EX_P1, ("var", "c")))],
+                                [("pattern", (("var", "d"), _EX_P2, ("var", "c")))])],
+                    neg)),
+    ]
+    data = [(_EX_S0, _EX_P0, _EX_S1), (_EX_S1, _EX_P2, O_LITS[0])]
+    return data, els, ["a", "b"], False
+
+
 @given(select_case())
+@example(_exists_union_arm_case(neg=False))
+@example(_exists_union_arm_case(neg=True))
 @settings(
     max_examples=25,
     deadline=None,
@@ -466,16 +499,20 @@ def test_group_count_matches_naive(spark, case):
 # GRAPH g { … }: constant IRI selects one named graph; a variable ranges
 # over the named graphs, binding (or CONSTRAINING, when the inner group
 # also binds it — hence ?a as a graph slot) the graph name. Inner groups
-# reuse the full grammar, so subselects/EXISTS/BIND inherit the context.
+# reuse the full grammar, so subselects/EXISTS/BIND inherit the context,
+# plus property paths, whose every step must stay inside one graph.
 graph_slot = st.sampled_from([("var", "a"), ("var", "g")] + G_IRIS)
 
 
 def graph_group_st(depth: int):
-    inner = group_st(depth)
+    path_el = st.builds(lambda s, p, o: ("pathpattern", s, p, o),
+                        s_slot, path_st(1), o_slot)
+    inner = st.tuples(group_st(depth), st.lists(path_el, max_size=1)).map(
+        lambda t: t[0] + t[1])
     graph_el_st = st.builds(
         lambda gs, g: ("graph", gs, g), graph_slot, inner)
     return st.lists(
-        st.one_of(pattern_el, filter_el, graph_el_st),
+        st.one_of(pattern_el, filter_el, path_el, graph_el_st),
         min_size=1, max_size=3,
     )
 
@@ -494,7 +531,26 @@ def graph_case(draw):
     return quads, els, proj
 
 
+_G0, _G1 = G_IRIS
+
+
 @given(graph_case())
+# GRAPH ?a { FILTER EXISTS { ?a ?b ?a } }: the EXISTS holds per graph
+# (only g0 has an s = o triple); a global probe answered for both
+@example(([(_EX_S0, _EX_P0, _EX_S0, _G0), (_EX_S1, _EX_P0, _EX_S0, _G1)],
+          [("graph", ("var", "a"), [("filter", ("exists", [
+              ("pattern", (("var", "a"), ("var", "b"), ("var", "a")))], False))])],
+          ["a"]))
+# GRAPH ?g { ?a <p0>/<p1> ?c }: the two steps lie in different graphs
+@example(([(_EX_S0, _EX_P0, _EX_S1, _G0), (_EX_S1, _EX_P1, S_IRIS[2], _G1)],
+          [("graph", ("var", "g"), [("pathpattern", ("var", "a"),
+                                     ("seq", _EX_P0, _EX_P1), ("var", "c"))])],
+          ["a", "c", "g"]))
+# GRAPH ?g { ?a ^<p0> ?c }: the edge is in g0 only
+@example(([(_EX_S0, _EX_P0, _EX_S1, _G0), (S_IRIS[2], _EX_P1, S_IRIS[3], _G1)],
+          [("graph", ("var", "g"), [("pathpattern", ("var", "a"),
+                                     ("inv", _EX_P0), ("var", "c"))])],
+          ["a", "c", "g"]))
 @settings(
     max_examples=15,
     deadline=None,

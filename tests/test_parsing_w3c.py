@@ -13,7 +13,7 @@ from pathlib import Path
 
 import pytest
 
-from conftest import extract_manifest
+from conftest import extract_manifest, requires_reference
 from mentor_rdf_parsers_spark.parsing.compare import precision_recall, quads_match
 from mentor_rdf_parsers_spark.parsing.golden import parse_nt12
 from mentor_rdf_parsers_spark.parsing.n3 import parse_n3
@@ -42,6 +42,7 @@ def _params(kind: str):
     return out
 
 
+@requires_reference
 def test_manifest_nonempty():
     total_pos = sum(len(m["positive"]) for m in MANIFESTS.values())
     total_neg = sum(len(m["negative"]) for m in MANIFESTS.values())
@@ -51,6 +52,7 @@ def test_manifest_nonempty():
     assert total_gold >= 30, total_gold
 
 
+@requires_reference
 @pytest.mark.parametrize("syntax,path", _params("positive"))
 def test_positive(syntax, path):
     text = Path(path).read_text(encoding="utf-8")
@@ -58,6 +60,7 @@ def test_positive(syntax, path):
     assert errors == [], f"{path}: {errors[:3]}"
 
 
+@requires_reference
 @pytest.mark.parametrize("syntax,path", _params("negative"))
 def test_negative(syntax, path):
     """Negative docs land in the error side-channel — no crash, no silent accept."""
@@ -68,6 +71,7 @@ def test_negative(syntax, path):
     PARSERS[syntax](text, strict=False)
 
 
+@requires_reference
 @pytest.mark.parametrize("syntax,pair", _params("golden"))
 def test_golden_eval(syntax, pair):
     in_path, golden_path = pair

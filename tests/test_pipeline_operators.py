@@ -404,10 +404,8 @@ def test_multimodal_audio_features(spark):
         extract_audio_features(media, strict_codecs=True)
 
 
-def test_media_from_documents_passthrough(spark):
-    from mentor_rdf_parsers_spark.sources.fixtures import load_fixture_documents
-
-    docs = load_fixture_documents(spark, syntaxes=["ntriples"])
+def test_media_from_documents_passthrough(spark, rdf_docs):
+    docs = rdf_docs
     media = media_from_documents(docs)
     n_media_docs = docs.where(
         F.exists("spans", lambda s: s["kind"] == "media")

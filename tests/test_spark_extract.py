@@ -1,10 +1,15 @@
-"""End-to-end Spark extraction over the synthesized documents table."""
+"""End-to-end Spark extraction over the synthesized documents table.
+
+Tests that need the reference's W3C fixtures (negative documents,
+golden pairs) are marked `requires_reference`; the rest run over the
+rendered testdata corpus (`rdf_docs`)."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
+from conftest import requires_reference
 from mentor_rdf_parsers_spark.operators.extract import extract_triples, split_extract
 from mentor_rdf_parsers_spark.parsing.compare import quads_match
 from mentor_rdf_parsers_spark.parsing.golden import parse_nt12
@@ -21,12 +26,13 @@ def extracted(spark):
     out.unpersist()
 
 
-def test_extract_counts(spark, extracted):
-    triples, errors = split_extract(extracted)
-    n_triples = triples.count()
-    n_errors = errors.count()
-    assert n_triples > 3000, n_triples
-    assert n_errors > 200, n_errors
+def test_extract_counts(spark, rdf_docs):
+    """Every rendered document parses into exactly its four triples."""
+    triples, errors = split_extract(extract_triples(rdf_docs, strict=True))
+    n_docs = rdf_docs.count()
+    assert n_docs > 0
+    assert triples.count() == 4 * n_docs
+    assert errors.count() == 0
 
 
 def test_negative_docs_quarantined_not_failed(spark, extracted):
@@ -44,6 +50,7 @@ def test_negative_docs_quarantined_not_failed(spark, extracted):
     assert bad_with_triples == 0
 
 
+@requires_reference
 def test_golden_parity_through_spark(spark, extracted):
     """RDF 1.2 golden pairs must match after the full Spark round-trip
     (Arrow encode → flat schema → row_to_quad), not just in-process."""
@@ -71,11 +78,11 @@ def test_golden_parity_through_spark(spark, extracted):
     assert checked >= 30
 
 
-def test_span_sequence_invariant(spark):
+def test_span_sequence_invariant(spark, rdf_docs):
     """Per-row invariant (BASELINE.json input_hint): the pipeline never
     mutates the documents table — span sequence (kind, text, media_ref,
     order) survives extraction untouched, media spans included."""
-    docs = load_fixture_documents(spark).persist()
+    docs = rdf_docs
     before = docs.select(
         "doc_id",
         F.expr(
@@ -101,7 +108,6 @@ def test_span_sequence_invariant(spark):
     # media spans present and ordered
     media = docs.select(F.explode("spans").alias("s")).where("s.kind = 'media'").count()
     assert media > 100
-    docs.unpersist()
 
 
 def test_skolemization_cross_doc_distinct(spark):
@@ -117,6 +123,7 @@ def test_skolemization_cross_doc_distinct(spark):
     assert clashes == 0
 
 
+@requires_reference
 def test_corpus_precision_recall_gate(spark):
     """BASELINE metric: triple P/R >= 0.95 vs the reference's golden RDF
     1.2 outputs, computed through the real Spark extract path."""
@@ -128,21 +135,16 @@ def test_corpus_precision_recall_gate(spark):
     assert pr["recall"] >= 0.95, pr
 
 
-def test_dedup_parse_cache_identical_output(spark):
+def test_dedup_parse_cache_identical_output(spark, rdf_docs):
     """Content-addressed parse cache must be byte-identical to cold
     parsing, including skolemized bnode ids across replicated docs."""
-    from mentor_rdf_parsers_spark.sources.fixtures import (
-        load_fixture_documents,
-        replicate_documents,
-    )
+    from mentor_rdf_parsers_spark.sources.fixtures import replicate_documents
 
-    docs = replicate_documents(
-        load_fixture_documents(spark, syntaxes=["turtle", "ntriples"]), 3
-    )
+    docs = replicate_documents(rdf_docs, 3)
     cold_t, cold_e = split_extract(extract_triples(docs))
     hot_t, hot_e = split_extract(extract_triples(docs, dedup_parse=True))
     cols = ["doc_id", "s_kind", "s", "p", "o_kind", "o", "o_lang", "o_dt", "g"]
-    assert cold_t.count() == hot_t.count()
+    assert cold_t.count() == hot_t.count() > 0
     assert cold_t.select(cols).exceptAll(hot_t.select(cols)).count() == 0
     assert hot_t.select(cols).exceptAll(cold_t.select(cols)).count() == 0
     assert cold_e.count() == hot_e.count()

@@ -127,6 +127,16 @@ def test_delete_where_variable_graph(graph):
     assert len(got) == 2  # both default-graph rows survive
 
 
+def test_delete_where_quads_form_one_group(graph):
+    """DELETE WHERE { QP } is DELETE { QP } WHERE { QP }: the default-
+    graph triple and the GRAPH ?g quad join on ?o, and ?g is bound at
+    the GRAPH exit — only :c :old :a (in g1) and :a :p "1" match."""
+    out = execute_update(
+        PREFIX + "DELETE WHERE { GRAPH ?g { ?s :old ?o } ?o :p ?v }", graph
+    )
+    assert facts(out) == [("http://ex/b", "http://ex/p", "2", None)]
+
+
 def test_load_turtle_file(graph, tmp_path):
     doc = tmp_path / "extra.ttl"
     doc.write_text('@prefix : <http://ex/> .\n:loaded :via "load" .\n')

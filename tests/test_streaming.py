@@ -9,14 +9,19 @@ from pyspark.sql import functions as F
 
 from mentor_rdf_parsers_spark.operators.extract import extract_triples, split_extract
 from mentor_rdf_parsers_spark.schemas import DOCUMENTS
-from mentor_rdf_parsers_spark.sources.fixtures import load_fixture_documents
 from mentor_rdf_parsers_spark.streaming.extract_stream import start_extract_stream
 
 
-def test_stream_extract_matches_batch(spark, tmp_path):
+def test_stream_extract_matches_batch(spark, tmp_path, rdf_docs):
     in_dir = str(tmp_path / "docs_in")
     out_dir = str(tmp_path / "stream_out")
-    docs = load_fixture_documents(spark, syntaxes=["ntriples"]).persist()
+    # the rendered corpus plus two unparseable documents for the error sink
+    bad = spark.createDataFrame(
+        [(f"bad/{i}", [("text", "<http://ex/s> <http://ex/p> .", None, 0)],
+          "ntriples", "negative") for i in range(2)],
+        DOCUMENTS,
+    )
+    docs = rdf_docs.unionByName(bad).persist()
     docs.write.parquet(in_dir)
 
     q = start_extract_stream(spark, in_dir, out_dir, available_now=True)

@@ -7,7 +7,11 @@ from pathlib import Path
 
 import pytest
 
+from conftest import HAVE_REFERENCE, requires_reference
 from mentor_rdf_parsers_spark.functions import token_metadata as tm
+
+if not HAVE_REFERENCE:
+    pytest.skip(requires_reference.kwargs["reason"], allow_module_level=True)
 
 REF = Path("/root/reference/src/token-metadata.ts")
 
