@@ -154,17 +154,9 @@ def main() -> None:
         query_runs[name] = _spread(runs)
         return round(min(runs), 3)
 
-    bench_meta: dict[str, object] = {}
     for name in bench_queries:
         try:
             timings[name] = time_query(name, lambda: qs[name](spark, sf_dir))
-            if name == "kg_n3_entailment":
-                # prove which forward_chain path the timed run took
-                # (VERDICT r4 ask #1a: the 24.7s claim is only credible
-                # with the specialization marker in the attested JSON)
-                from mentor_rdf_parsers_spark.operators import reasoning
-
-                bench_meta["kg_n3_entailment_path"] = dict(reasoning.LAST_RUN_INFO)
         except Exception as exc:  # keep the bench line parseable no matter what
             timings[name] = -1.0
             print(f"bench query {name} failed: {exc}", file=sys.stderr)
@@ -220,7 +212,6 @@ def main() -> None:
         "fixture_docs": n_docs,
         "fixture_triples": n_triples,
         "pr_vs_reference_golden": pr,
-        **bench_meta,
     }
     print(json.dumps(out))
     spark.stop()

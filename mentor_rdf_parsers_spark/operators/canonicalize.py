@@ -6,17 +6,15 @@ single-document parser library); semantics come from the north_rule:
 connected-components (hash-min label propagation) pass over the edge
 DataFrame".
 
-Algorithm: hash-min label propagation **with pointer doubling**.  Plain
-hash-min needs O(diameter) joins — a 1M-node alias chain would need 1M
-shuffles.  Each round here does
-
-  1. neighbor-min:  comp[v] ← min(comp[v], min over neighbors u of comp[u])
-  2. pointer jump:  comp[v] ← comp[comp[v]]   (label-of-label join)
-
-which converges in O(log diameter) rounds.  Every round cuts lineage via
-``localCheckpoint`` (or a persistent ``checkpoint_dir`` for the
-north_rule's resumability) — without this the plan doubles per iteration
-and the driver OOMs long before 100 TB.
+Algorithm: Kiveris large-star / small-star (connected_components).
+Plain hash-min label propagation needs O(diameter) joins — a 1M-node
+alias chain would need 1M shuffles; alternating the two star
+operations converges in O(log n) rounds for any id order.  Each round
+is a step function run by ``iterutil.fixpoint``, which cuts lineage
+after every round (``localCheckpoint``, or reliable checkpoints under
+``checkpoint_dir`` for the north_rule's resumability — without a cut
+the plan doubles per round and the driver OOMs long before 100 TB),
+stops when the edge set is unchanged and raises at ``max_iter``.
 
 Scale notes:
 * all joins are equi-joins on a long key → sort-merge/shuffle-hash under
@@ -27,7 +25,7 @@ Scale notes:
   neighbor once (edges deduplicated first), and the star operations
   bound neighborhood growth by construction; residual skew is handled
   explicitly by salting (materialize.with_salt). AQE for the rounds is
-  auto-resolved from input size (r4, iterutil.resolve_adaptive):
+  auto-resolved from the input size (iterutil.resolve_adaptive):
   re-planning a fixed-shape round every iteration is serial latency on
   work-dominated inputs (0.73→0.52 in 2→8-core scaling efficiency),
   while partition coalescing wins 3× on tiny rounds at many cores.
@@ -40,7 +38,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .iterutil import fixed_plan, resolve_adaptive
+from .iterutil import cut, fixpoint
 
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
@@ -55,10 +53,6 @@ def sameas_edges(triples: DataFrame) -> DataFrame:
     return e.select(
         F.xxhash64("s").alias("src"), F.xxhash64("o").alias("dst")
     )
-
-
-def _cut(df: DataFrame, checkpoint_dir: Optional[str]) -> DataFrame:
-    return df.checkpoint(eager=True) if checkpoint_dir else df.localCheckpoint(eager=True)
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -89,74 +83,43 @@ def _small_star(sym: DataFrame) -> DataFrame:
     return attach_nbrs.union(attach_self).where(F.col("u") != F.col("v")).distinct()
 
 
+def _both_ways(edges: DataFrame) -> DataFrame:
+    return edges.union(edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+
+
 def connected_components(
     edges: DataFrame,
     max_iter: int = 50,
     checkpoint_dir: Optional[str] = None,
-    adaptive_exec: Optional[bool] = None,
 ) -> DataFrame:
     """(src:long, dst:long) undirected edges → (node:long, comp:long)
     where comp = min node id of the component.
-
-    AQE for the rounds is auto-resolved from the input size
-    (``adaptive_exec``: None = auto, True/False = force): on
-    work-dominated inputs runtime re-planning is repeated serial
-    latency (measured 2→8-core scaling efficiency 0.73 off vs 0.52 on,
-    4M edges), on tiny inputs at many cores AQE's coalescing wins 3×
-    (5k edges, local[32]: 6.6–8.7 s vs 20–27 s) — see
-    operators/iterutil.py for both measurements.
 
     Alternating large-star / small-star (Kiveris et al., "Connected
     Components in MapReduce and Beyond"): converges in O(log n) rounds
     for ANY id distribution — naive hash-min label propagation is
     O(diameter), which on a 10^6-long alias chain with hashed (randomly
-    ordered) ids means 10^6 shuffle rounds; this needs ~20.  Each round
-    is one groupBy + one equi-join per phase, lineage cut per round
-    (``checkpoint_dir`` switches to reliable checkpoints for the
-    north_rule's resumability; default is session-local).
+    ordered) ids means 10^6 shuffle rounds; this needs ~20.  One round
+    is a step function for :func:`iterutil.fixpoint` (one groupBy + one
+    equi-join per phase, lineage cut after each phase); the edge set
+    stops changing once every node points at its component min, and
+    ``max_iter`` rounds without that raise.
 
     Deterministic; returns one row per distinct node of the edge set.
     """
-    spark = edges.sparkSession
-    if checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(checkpoint_dir)
+    def step(star: DataFrame) -> DataFrame:
+        # large-star needs the symmetric view; small-star the directed one
+        ls, _ = cut(_large_star(_both_ways(star)), checkpoint_dir)
+        return _small_star(_both_ways(ls))
 
-    # one-shot prep under the session's settings; the count on the
-    # checkpointed edge set is ~free and drives the auto AQE decision
-    sym = (
+    sym = _both_ways(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
-        .union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-        .where(F.col("u") != F.col("v"))
-        .distinct()
-    )
-    sym = _cut(sym, checkpoint_dir)
-    all_nodes = _cut(sym.select(F.col("u").alias("node")).distinct(), checkpoint_dir)
-
-    with fixed_plan(spark, resolve_adaptive(spark, adaptive_exec, sym.count())):
-        star = sym
-        prev_sig = None
-        for _ in range(max_iter):
-            # large-star needs the symmetric view; small-star the directed one
-            ls = _large_star(star.union(star.select(F.col("v").alias("u"), F.col("u").alias("v"))))
-            ls = _cut(ls, checkpoint_dir)
-            ss = _small_star(ls.union(ls.select(F.col("v").alias("u"), F.col("u").alias("v"))))
-            star = _cut(ss, checkpoint_dir)
-            # convergence: edge set stable — order-insensitive signature via
-            # count + decimal hash-sum (long sums overflow under ANSI mode)
-            sig = star.agg(
-                F.count("*").alias("n"),
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
-            ).collect()[0]
-            sig = (sig["n"], sig["h"])
-            if sig == prev_sig:
-                break
-            prev_sig = sig
-
-    # star edges now point every non-min node at its component min
-    comp = star.select(F.col("u").alias("node"), F.col("v").alias("comp"))
-    return (
-        all_nodes.join(comp, "node", "left")
-        .select("node", F.coalesce("comp", "node").alias("comp"))
+    ).where(F.col("u") != F.col("v")).distinct()
+    star = fixpoint("connected_components", sym, step, max_iter, checkpoint_dir)
+    # converged star edges point every non-min node at its component min
+    mins = star.select(F.col("v").alias("node")).distinct()
+    return star.select(F.col("u").alias("node"), F.col("v").alias("comp")).union(
+        mins.select("node", F.col("node").alias("comp"))
     )
 
 

@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .iterutil import cut, fixpoint
 from .linking import (
     minhash_candidate_pairs,
     normalize_key,
@@ -382,38 +383,33 @@ def dedup_keep_first(
     ``exact=True``: the true keep-first greedy — an id is dropped only
     if dominated by a SURVIVING id — computed by topological peeling
     (round k keeps the ids whose every remaining dominator is gone,
-    then discards their dominated neighbors). Rounds ∝ longest
-    domination chain; near-dup clusters are shallow in practice, and
-    ``max_iter`` bounds pathological inputs.
+    then discards their dominated neighbors). Each peel is a step
+    function for :func:`iterutil.fixpoint` over the dropped-id set, which
+    only grows until no pair is left; rounds ∝ longest domination
+    chain, near-dup clusters are shallow in practice, and a chain
+    deeper than ``max_iter`` raises.
     """
     if not exact:
         drops = pairs.select(F.col("b").alias(id_col)).distinct()
         return df.join(drops, id_col, "left_anti")
 
-    p = pairs.select("a", "b").where(F.col("a") < F.col("b")).distinct() \
-        .localCheckpoint(eager=True)
-    dropped = None
-    for _ in range(max_iter):
-        if p.isEmpty():
-            break
-        # roots: ids never appearing as b in the remaining pair set are
-        # certain survivors; everything they dominate is dropped
-        roots = p.select(F.col("a").alias("id")).distinct().join(
-            p.select(F.col("b").alias("id")).distinct(), "id", "left_anti"
-        )
-        newly = (
-            p.join(roots.withColumnRenamed("id", "a"), "a")
-            .select(F.col("b").alias("id")).distinct()
-        )
-        dropped = newly if dropped is None else dropped.union(newly).distinct()
-        dropped = dropped.localCheckpoint(eager=True)
+    p, _ = cut(pairs.select("a", "b").where(F.col("a") < F.col("b")).distinct())
+
+    def step(dropped: DataFrame) -> DataFrame:
         # dropped ids neither dominate nor need re-deciding
-        p = (
+        live = (
             p.join(dropped.withColumnRenamed("id", "a"), "a", "left_anti")
             .join(dropped.withColumnRenamed("id", "b"), "b", "left_anti")
-            .select("a", "b")
-            .localCheckpoint(eager=True)
         )
-    if dropped is None:
-        return df
+        # roots: ids never appearing as b in the remaining pair set are
+        # certain survivors; everything they dominate is dropped
+        roots = live.select(F.col("a").alias("id")).distinct().join(
+            live.select(F.col("b").alias("id")).distinct(), "id", "left_anti"
+        )
+        newly = live.join(roots.withColumnRenamed("id", "a"), "a").select(
+            F.col("b").alias("id"))
+        return dropped.union(newly).distinct()
+
+    dropped = fixpoint("dedup_keep_first", p.select(F.col("b").alias("id")).limit(0),
+                       step, max_iter)
     return df.join(dropped.withColumnRenamed("id", id_col), id_col, "left_anti")

@@ -1,11 +1,28 @@
-"""Shared plumbing for driver-loop iterative operators (CC, transitive
-closure, PageRank, forward chaining).
+"""One fixpoint loop for the iterative operators (CC, transitive closure,
+forward chaining, exact keep-first; PageRank uses ``cut`` only).
 
-``fixed_plan`` scopes adaptive query execution OFF for the duration of
-an iterative loop and restores the session setting afterwards;
-``resolve_adaptive`` picks the mode automatically from the input size.
-Whether AQE helps an iterative loop depends on the regime, and both
-sides were measured with interleaved A/B on identical inputs:
+Catalyst has no recursion, so each operator is a *step function*
+``state → state`` over one DataFrame and :func:`fixpoint` runs the
+loop: ``state = cut(step(state))`` until the state stops changing.
+
+``cut`` is the lineage cut every round needs (without it the plan
+doubles per round and the driver OOMs): an eager ``localCheckpoint``,
+or a reliable ``checkpoint`` under ``checkpoint_dir`` for resumable
+runs. The same checkpoint job computes the state's order-insensitive
+signature — row count plus the decimal sum of a row hash (long sums
+overflow under ANSI mode) — through ``DataFrame.observe``, so the
+signature adds no Spark job (a cut is one job with AQE off) and there
+is no separate convergence probe. An unchanged signature is the one convergence rule:
+for growing states (closure, Δ-tagged facts, dropped ids) it means
+"nothing added", for CC it means "edge set stable". A loop whose last
+allowed round still changed the state raises instead of returning a
+partial result.
+
+``fixed_plan`` scopes adaptive query execution OFF for the loop and
+restores the session setting afterwards; :func:`fixpoint` decides from
+the initial state's row count (:func:`resolve_adaptive`). Whether AQE
+helps an iterative loop depends on the regime, and both sides were
+measured with interleaved A/B on identical inputs:
 
 * **Work-dominated rounds** (big input, partitions sized to the data):
   the round shape is fixed — one groupBy + one equi-join with stable
@@ -32,7 +49,10 @@ by salting (operators/materialize.py:with_salt).
 from __future__ import annotations
 
 from contextlib import contextmanager
-from typing import Optional
+from typing import Callable, Optional, Tuple
+
+from pyspark.sql import DataFrame, Observation
+from pyspark.sql import functions as F
 
 # ~50k rows/core: the measured AQE-off win sits at 500k rows/core and
 # the measured AQE-on win at ~160 rows/core — an order of magnitude of
@@ -42,12 +62,10 @@ AUTO_FIXED_PLAN_ROWS_PER_CORE = 50_000
 _AQE_KEYS = ("spark.sql.adaptive.enabled",)
 
 
-def resolve_adaptive(spark, adaptive_exec: Optional[bool], rows: int) -> bool:
-    """Explicit caller choice wins; ``None`` = auto by rows/core over a
-    MATERIALIZED input count (callers count a checkpointed DataFrame —
-    plan statistics after joins/windows are guesses, a count is not)."""
-    if adaptive_exec is not None:
-        return adaptive_exec
+def resolve_adaptive(spark, rows: int) -> bool:
+    """Keep AQE below ``AUTO_FIXED_PLAN_ROWS_PER_CORE`` rows per core of
+    a MATERIALIZED input count (plan statistics after joins/windows are
+    guesses, a count is not)."""
     cores = max(spark.sparkContext.defaultParallelism, 1)
     return rows < AUTO_FIXED_PLAN_ROWS_PER_CORE * cores
 
@@ -75,3 +93,41 @@ def fixed_plan(spark, adaptive_exec: bool = False):
                 spark.conf.unset(k)
             else:
                 spark.conf.set(k, v)
+
+
+def cut(df: DataFrame, checkpoint_dir: Optional[str] = None) -> Tuple[DataFrame, tuple]:
+    """Eagerly checkpoint ``df`` (session-local, or reliable under
+    ``checkpoint_dir``) and return it with its ``(count, hash-sum)``
+    signature, observed on the checkpoint's own job. An empty frame
+    signs ``(0, None)``."""
+    obs = Observation()
+    h = F.xxhash64(*[df[c] for c in df.columns]).cast("decimal(38,0)")
+    df = df.observe(obs, F.count(F.lit(1)).alias("n"), F.sum(h).alias("h"))
+    if checkpoint_dir:
+        df.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
+        df = df.checkpoint(eager=True)
+    else:
+        df = df.localCheckpoint(eager=True)
+    sig = obs.get
+    return df, (sig["n"], sig["h"])
+
+
+def fixpoint(
+    name: str, state: DataFrame, step: Callable[[DataFrame], DataFrame],
+    max_iter: int, checkpoint_dir: Optional[str] = None,
+) -> DataFrame:
+    """Run ``state = cut(step(state))`` until the state's signature stops
+    changing; AQE for the rounds is resolved from the initial state's
+    count. Raises ``RuntimeError`` when round ``max_iter`` still
+    changed the state."""
+    spark = state.sparkSession
+    state, sig = cut(state, checkpoint_dir)
+    with fixed_plan(spark, resolve_adaptive(spark, sig[0])):
+        for _ in range(max_iter):
+            state, new_sig = cut(step(state), checkpoint_dir)
+            if new_sig == sig:
+                return state
+            sig = new_sig
+    raise RuntimeError(
+        f"{name} did not converge within max_iter={max_iter} rounds"
+    )

@@ -4,8 +4,8 @@ The reference parses SPARQL property paths (`/ | ^ * + ? !(…)`,
 /root/reference/src/sparql/parser.ts:1628-1762) but never evaluates
 them; this module is the Spark execution for the recursive ones.
 `p+` / `p*` are iterative transitive closure — Catalyst has no
-recursion, so a driver loop with **path doubling** does it in
-O(log diameter) self-joins (SURVEY.md §4.2), lineage cut per iteration
+recursion, so **path doubling** run by ``iterutil.fixpoint`` does it in
+O(log diameter) self-joins (SURVEY.md §4.2), lineage cut per round
 (localCheckpoint by default, reliable checkpoints via
 ``checkpoint_dir`` for long/resumable runs).
 """
@@ -17,20 +17,21 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .canonicalize import _cut
-from .iterutil import fixed_plan, resolve_adaptive
+from .iterutil import cut, fixed_plan, fixpoint, resolve_adaptive
 
 
 def transitive_closure(
     edges: DataFrame, max_iter: int = 30,
     checkpoint_dir: Optional[str] = None,
-    adaptive_exec: Optional[bool] = None,
 ) -> DataFrame:
     """(src, dst) → all pairs (src, dst) connected by a directed path.
 
     Path doubling: R ← R ∪ (R ∘ R) squares the reachable path length
     each round, so a 10^6-long chain closes in ~20 joins instead of 10^6.
     Output is distinct pairs; self-loops only if present in the input.
+    The round is a step function for :func:`iterutil.fixpoint`: R only
+    grows, so "state unchanged" means "no pair added", and ``max_iter``
+    rounds that still add pairs raise.
 
     ``checkpoint_dir`` switches the per-round lineage cut to reliable
     checkpoints — the round-1 finding is that ``localCheckpoint`` alone
@@ -38,37 +39,16 @@ def transitive_closure(
     this Spark build, so long-running closures should pass a directory
     (mirrors canonicalize.connected_components).
     """
-    if checkpoint_dir:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    # AQE auto-resolved from input size (iterutil.resolve_adaptive):
-    # per-round re-planning is serial latency on work-dominated rounds,
-    # but coalescing wins on tiny rounds at many cores — both regimes
-    # measured on CC, same round shape as this loop.
-    closure = _cut(edges.select("src", "dst").distinct(), checkpoint_dir)
-    spark = edges.sparkSession
-    with fixed_plan(spark, resolve_adaptive(spark, adaptive_exec, closure.count())):
-        for _ in range(max_iter):
-            new_pairs = (
-                closure.alias("a")
-                .join(closure.alias("b"), F.col("a.dst") == F.col("b.src"))
-                .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-            )
-            grown = _cut(closure.union(new_pairs).distinct(), checkpoint_dir)
-            # fixpoint when no pair was added
-            if grown.count() == closure.count():
-                closure = grown
-                break
-            closure = grown
-    return closure
+    def step(closure: DataFrame) -> DataFrame:
+        new_pairs = (
+            closure.alias("a")
+            .join(closure.alias("b"), F.col("a.dst") == F.col("b.src"))
+            .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
+        )
+        return closure.union(new_pairs).distinct()
 
-
-def path_edges(triples: DataFrame, predicate: str, inverse: bool = False) -> DataFrame:
-    """Triples with predicate `p` as an edge list (`^p` swaps ends —
-    the SPARQL inverse path, src/sparql/parser.ts:1744-1752)."""
-    e = triples.where(F.col("p") == predicate)
-    if inverse:
-        return e.select(F.col("o").alias("src"), F.col("s").alias("dst"))
-    return e.select(F.col("s").alias("src"), F.col("o").alias("dst"))
+    return fixpoint("transitive_closure", edges.select("src", "dst").distinct(),
+                    step, max_iter, checkpoint_dir)
 
 
 def path_sequence(left: DataFrame, right: DataFrame) -> DataFrame:
@@ -95,7 +75,6 @@ def pagerank(
     damping: str = "0.85",
     scale: int = 18,
     checkpoint_dir: Optional[str] = None,
-    adaptive_exec: Optional[bool] = None,
 ) -> DataFrame:
     """Fixed-iteration PageRank over (src, dst) edges → (node, rank).
 
@@ -106,24 +85,22 @@ def pagerank(
     rather than convergence threshold keeps the plan cross-checkable.
 
     Scale shape: per iteration one groupBy("dst") shuffle of (dst,
-    contribution) pairs; rank table is (node, rank) only. Lineage cut
-    per round via localCheckpoint.
+    contribution) pairs; rank table is (node, rank) only. A fixed round
+    count needs no fixpoint: each round is an ``iterutil.cut`` and AQE
+    is resolved from the node count.
     """
     dec = f"decimal(38,{scale})"
     d = F.lit(damping).cast(dec)
     one_minus_d = (F.lit(1).cast(dec) - d).cast(dec)
 
-    if checkpoint_dir:
-        edges.sparkSession.sparkContext.setCheckpointDir(checkpoint_dir)
-    nodes = _cut(
+    nodes, (n_nodes, _) = cut(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct(),
         checkpoint_dir,
     )
-    # AQE auto-resolved from the node count (iterutil.resolve_adaptive)
     spark = edges.sparkSession
-    with fixed_plan(spark, resolve_adaptive(spark, adaptive_exec, nodes.count())):
+    with fixed_plan(spark, resolve_adaptive(spark, n_nodes)):
         out_deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
         ranks = nodes.withColumn("rank", F.lit(1).cast(dec))
         for _ in range(iterations):
@@ -137,7 +114,7 @@ def pagerank(
                 .groupBy("node")
                 .agg(F.sum("c").cast(dec).alias("inflow"))
             )
-            ranks = _cut(
+            ranks, _ = cut(
                 nodes.join(contrib, "node", "left")
                 .select(
                     "node",

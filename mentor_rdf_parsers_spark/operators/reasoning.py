@@ -17,24 +17,20 @@ existentials — those rules are skipped with a warning entry.
 
 from __future__ import annotations
 
+from itertools import count
 from typing import List, Tuple
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sparql.executor import Executor
-from .iterutil import fixed_plan, resolve_adaptive
+from .iterutil import fixpoint
 from .paths import transitive_closure
 from ..sparql.updates import _instantiate
 
 LOG_IMPLIES = "http://www.w3.org/2000/10/swap/log#implies"
 
 _KEY = ["s_kind", "s", "p", "o_kind", "o", "o_lang", "o_dt"]
-
-# Observability: which execution path the most recent forward_chain call
-# took (benches read this after timing so the attested number provably
-# ran the path it claims — {"used_specialization": bool, "rules": int}).
-LAST_RUN_INFO: dict = {}
 
 
 def _row_term(kind: str, v: str, lang=None, dt=None):
@@ -142,6 +138,18 @@ def _transitive_shape(premise: list, conclusion: list):
     return None
 
 
+def _new_facts(derived: DataFrame, facts: DataFrame) -> DataFrame:
+    """Derived rows not yet in ``facts``: anti-join with null-safe
+    equality (o_lang/o_dt are nullable — a plain anti-join would never
+    match null keys and the loop would not terminate)."""
+    derived = derived.select(facts.columns).dropDuplicates(_KEY)
+    cond = None
+    for c in _KEY:
+        eq = derived[c].eqNullSafe(facts[c])
+        cond = eq if cond is None else cond & eq
+    return derived.join(facts, cond, "left_anti")
+
+
 def _chain_transitive(facts: DataFrame, rules: list, max_iter: int) -> DataFrame:
     """Fast path for an all-transitive rule set: per predicate, closure
     by path doubling over (src, dst) term structs, then one conclusion
@@ -166,29 +174,23 @@ def _chain_transitive(facts: DataFrame, rules: list, max_iter: int) -> DataFrame
                             conclusion[0][2], None)]
         )
         derived = new if derived is None else derived.unionByName(new)
-    derived = derived.select(facts.columns).dropDuplicates(_KEY)
-    cond = None
-    for c in _KEY:
-        eq = derived[c].eqNullSafe(facts[c])
-        cond = eq if cond is None else cond & eq
-    delta = derived.join(facts, cond, "left_anti")
-    return facts.unionByName(delta)
+    return facts.unionByName(_new_facts(derived, facts))
 
 
 def forward_chain(
     triples: DataFrame, max_iter: int = 10,
-    adaptive_exec: "bool | None" = None,
     specialize: bool = True,
 ) -> DataFrame:
     """Materialize the default graph under the document's log:implies
     rules; returns facts (original default-graph triples + derived,
-    deduplicated). Semi-naive fixpoint loop bounded by max_iter: each
-    round joins only the PREVIOUS round's new facts (Δ) against the
-    store.
-    The frontier is `derived ANTI-JOIN facts` with null-safe equality
-    (o_lang/o_dt/g are nullable — a plain anti-join would never match
-    null keys and the loop would not terminate)."""
-    global LAST_RUN_INFO
+    deduplicated).
+
+    Semi-naive fixpoint run by :func:`iterutil.fixpoint`: the state is
+    the fact table with a ``__r`` column holding the round that derived
+    each row (0 = asserted), and round k joins only Δ = the rows of
+    round k-1 against the store. The state only grows, so "state
+    unchanged" means "Δ empty"; ``max_iter`` rounds that still derive
+    facts raise."""
     rules = [
         (p, c) for (p, c) in extract_rules(triples)
         if _vars_of(c) <= _vars_of(p)  # no existentials in conclusions
@@ -198,49 +200,32 @@ def forward_chain(
         & (F.col("s_kind") != "var") & (F.col("o_kind") != "var")
     )
     if not rules:
-        LAST_RUN_INFO = {"used_specialization": False, "rules": 0}
         return facts
+    facts = facts.dropDuplicates(_KEY)
     if specialize and all(
         _transitive_shape(p, c) is not None for (p, c) in rules
     ):
-        LAST_RUN_INFO = {"used_specialization": True, "rules": len(rules)}
-        facts = facts.dropDuplicates(_KEY).localCheckpoint(eager=True)
-        return _chain_transitive(facts, rules, max_iter)
-    LAST_RUN_INFO = {"used_specialization": False, "rules": len(rules)}
-    # AQE auto-resolved from the fact count (iterutil.resolve_adaptive):
-    # every round re-executes the same BGP-join shape, so re-planning is
-    # serial latency on work-dominated rounds; coalescing wins on tiny
-    # rounds at many cores (both regimes measured, see iterutil)
-    facts = facts.dropDuplicates(_KEY).localCheckpoint(eager=True)
-    spark = triples.sparkSession
-    with fixed_plan(spark, resolve_adaptive(spark, adaptive_exec, facts.count())):
-        delta = facts
-        for _ in range(max_iter):
-            ex_all = Executor(facts)
-            ex_delta = Executor(delta)
-            derived = None
-            for premise, conclusion in rules:
-                # extract_rules only emits plain (s, p, o) tuple terms
-                # (_row_term), so every premise is semi-naive-evaluable;
-                # property-path premises would need a full-evaluation
-                # fallback here if extract_rules ever surfaced them
-                bindings = _bgp_seminaive(ex_all, ex_delta, premise)
-                new = _instantiate(
-                    ex_all, bindings, [(s, p, o, None) for (s, p, o) in conclusion]
-                )
-                derived = new if derived is None else derived.unionByName(new)
-            derived = derived.select(facts.columns).dropDuplicates(_KEY)
-            cond = None
-            for c in _KEY:
-                eq = derived[c].eqNullSafe(facts[c])
-                cond = eq if cond is None else cond & eq
-            delta = derived.join(facts, cond, "left_anti").localCheckpoint(eager=True)
-            if delta.isEmpty():
-                break
-            # the store is re-checkpointed per round: it is read several
-            # times per round (Δ-join branches + anti-join), so one
-            # materialization beats re-scanning a growing union-of-deltas
-            # plan (measured at sf0.1 — the union-plan variant was ~5%
-            # slower despite skipping the checkpoint write)
-            facts = facts.unionByName(delta).localCheckpoint(eager=True)
-    return facts
+        return _chain_transitive(facts.localCheckpoint(eager=True), rules, max_iter)
+    rounds = count(1)
+
+    def step(state: DataFrame) -> DataFrame:
+        k = next(rounds)
+        store = state.drop("__r")
+        ex_all = Executor(store)
+        ex_delta = Executor(state.where(F.col("__r") == k - 1).drop("__r"))
+        derived = None
+        for premise, conclusion in rules:
+            # extract_rules only emits plain (s, p, o) tuple terms
+            # (_row_term), so every premise is semi-naive-evaluable;
+            # property-path premises would need a full-evaluation
+            # fallback here if extract_rules ever surfaced them
+            bindings = _bgp_seminaive(ex_all, ex_delta, premise)
+            new = _instantiate(
+                ex_all, bindings, [(s, p, o, None) for (s, p, o) in conclusion]
+            )
+            derived = new if derived is None else derived.unionByName(new)
+        delta = _new_facts(derived, store).withColumn("__r", F.lit(k))
+        return state.unionByName(delta)
+
+    state = facts.withColumn("__r", F.lit(0))
+    return fixpoint("forward_chain", state, step, max_iter).drop("__r")

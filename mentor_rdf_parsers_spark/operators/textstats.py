@@ -54,42 +54,6 @@ def stopword_hits_from(toks: Column, lang: str) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(lit_arr, t))).cast("long")
 
 
-def stopword_hits(text: Column, lang: str) -> Column:
-    return stopword_hits_from(tokens_col(text), lang)
-
-
-def language_id(text: Column) -> Column:
-    """argmax over stopword-hit counts; 'und' when all zero.
-    Deterministic tie-break: dict order en > de > fr > es."""
-    hit_cols = [stopword_hits(text, lang) for lang in STOPWORDS]
-    best = F.greatest(*hit_cols)
-    expr = F.lit("und")
-    for lang, hits in reversed(list(zip(STOPWORDS, hit_cols))):
-        expr = F.when((best > 0) & (hits == best), F.lit(lang)).otherwise(expr)
-    return expr
-
-
-def quality_score(text: Column) -> Column:
-    """Deterministic [0,1] quality heuristic:
-
-        0.4·min(1, n_tokens/100) + 0.3·stopword_ratio·5 (capped at .3)
-        + 0.3·alpha_ratio
-
-    where stopword_ratio uses the EN inventory and alpha_ratio is the
-    fraction of alphabetic characters. Rounded to 4 dp for stable
-    cross-engine comparison.
-    """
-    ntok = token_count(text).cast("double")
-    sw = stopword_hits(text, "en").cast("double")
-    raw = F.coalesce(text, F.lit(""))
-    nalpha = F.length(F.regexp_replace(F.lower(raw), r"[^a-z]", "")).cast("double")
-    nchar = F.length(raw).cast("double")
-    len_part = F.least(F.lit(1.0), ntok / F.lit(100.0)) * 0.4
-    sw_part = F.least(F.lit(0.3), F.when(ntok > 0, sw / ntok).otherwise(F.lit(0.0)) * 5 * 0.3)
-    alpha_part = F.when(nchar > 0, nalpha / nchar).otherwise(F.lit(0.0)) * 0.3
-    return F.round(len_part + sw_part + alpha_part, 4)
-
-
 def fingerprint(text: Column) -> Column:
     """Canonical document fingerprint: md5 of the sorted distinct token
     set — the classic 'fingerprint clustering' key (case/word-order/

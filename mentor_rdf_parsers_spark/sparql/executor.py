@@ -7,7 +7,7 @@ table in SURVEY.md §2.B:
 
     BGP                → _compat_join(inner) of triple-pattern scans
     OPTIONAL           → _compat_join(left)
-    UNION              → unionByName(allowMissingColumns)
+    UNION              → _union (unionByName, term types aligned)
     MINUS              → _compat_join(minus)
     FILTER (NOT) EXISTS→ _compat_join(semi / anti)
     FILTER expr        → where()
@@ -237,6 +237,58 @@ def _edges(t: DataFrame, inverse: bool = False) -> DataFrame:
     o = _term_struct(F.col("o_kind"), F.col("o"), F.col("o_lang"), F.col("o_dt"))
     src, dst = (o, s) if inverse else (s, o)
     return t.select(src.alias("__src"), dst.alias("__dst"), *_gcols(t))
+
+
+def _widened(a, b):
+    """`a` with each struct field nullable where `a`'s or `b`'s is, or
+    None when the two types differ in more than field nullability."""
+    if a == b:
+        return a
+    if not (isinstance(a, StructType) and isinstance(b, StructType)
+            and a.names == b.names):
+        return None
+    fields = []
+    for x, y in zip(a.fields, b.fields):
+        t = _widened(x.dataType, y.dataType)
+        if t is None:
+            return None
+        fields.append(StructField(x.name, t, x.nullable or y.nullable))
+    return StructType(fields)
+
+
+def _union(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Bag union of two solution frames by column name; a column missing
+    on one side is UNBOUND there.
+
+    A term built from a triples column has nullable struct fields, a
+    constant or VALUES term has NOT NULL ones. Spark unions such inputs
+    without a cast and re-types the union's output when the optimizer
+    prunes an empty input, after which PushDownLeftSemiAntiJoin fails
+    an assertion on a semi/anti join above the union. So each column
+    whose types differ only in field nullability is cast to one type.
+    """
+    def typed(df, types):
+        return df.select(*[
+            F.col(f"`{c}`").cast(types[c]).alias(c) if c in types
+            else F.col(f"`{c}`") for c in df.columns])
+
+    wa, wb = {}, {}
+    for c in a.columns:
+        if c not in b.columns:
+            continue
+        ta, tb = a.schema[c].dataType, b.schema[c].dataType
+        t = _widened(ta, tb)
+        if t is None or ta == tb:
+            continue
+        if t != ta:
+            wa[c] = t
+        if t != tb:
+            wb[c] = t
+    if wa:
+        a = typed(a, wa)
+    if wb:
+        b = typed(b, wb)
+    return a.unionByName(b, allowMissingColumns=True)
 
 
 class Executor:
@@ -499,9 +551,8 @@ class Executor:
         if not nullable:
             return left.join(right, shared, _SPARK_HOW[how])
         if how == "left":
-            return self._compat_join(left, right, "inner").unionByName(
-                self._compat_join(left, right, "anti"),
-                allowMissingColumns=True)
+            return _union(self._compat_join(left, right, "inner"),
+                          self._compat_join(left, right, "anti"))
 
         # Split each side into rows with every shared variable bound and
         # rows with some NULL. The all-bound pair is an equi-join; only
@@ -545,17 +596,17 @@ class Executor:
         if how == "inner":
             out = lb.join(rb, shared)
             if rn is not None:
-                out = out.unionByName(tolerant(lb, rn, "inner"))
+                out = _union(out, tolerant(lb, rn, "inner"))
         else:
             hit = lb.join(rb, shared, "left_semi")
             out = lb.join(rb, shared, "left_anti")
             if rn is not None:
-                hit = hit.unionByName(tolerant(out, rn, "semi"))
+                hit = _union(hit, tolerant(out, rn, "semi"))
                 out = tolerant(out, rn, "anti")
             if how == "semi":
                 out = hit
         if ln is not None:
-            out = out.unionByName(tolerant(ln, right, how))
+            out = _union(out, tolerant(ln, right, how))
         return out
 
     def _compile_pattern(self, node, graph) -> DataFrame:
@@ -632,7 +683,7 @@ class Executor:
         if t == "union":
             left = self._compile_pattern(node["left"], graph)
             right = self._compile_pattern(node["right"], graph)
-            return left.unionByName(right, allowMissingColumns=True)
+            return _union(left, right)
         if t == "graph":
             name = node["name"]
             if name[0] != "var":
@@ -736,7 +787,7 @@ class Executor:
             return df.limit(0)
         res = outs[0]
         for x in outs[1:]:
-            res = res.unionByName(x, allowMissingColumns=True)
+            res = _union(res, x)
         return res
 
     def _apply_filter(self, df: DataFrame, expr, graph) -> DataFrame:

@@ -419,9 +419,28 @@ def _exists_union_arm_case(neg: bool):
     return data, els, ["a", "b"], False
 
 
+def _union_retyped_case():
+    """`{} UNION { {} UNION { VALUES (?a) {} } { <s2> ?a ?b } UNION {} }
+    OPTIONAL { VALUES (?a) {} }`: the UNION mixes a VALUES term (NOT
+    NULL struct fields) with a scanned one (nullable fields); once the
+    optimizer pruned the empty VALUES input the union's output changed
+    type and Spark failed an internal assertion on the anti-join of the
+    OPTIONAL."""
+    els = [
+        ("union", [],
+         [("union", [], [("values", ["a"], [])]),
+          ("union", [("pattern", (S_IRIS[2], ("var", "a"), ("var", "b")))],
+           [])]),
+        ("optional", [("values", ["a"], [])]),
+    ]
+    data = [(S_IRIS[2], _EX_P0, _EX_S1), (_EX_S1, _EX_P1, O_LITS[2])]
+    return data, els, ["a", "b", "d"], False
+
+
 @given(select_case())
 @example(_exists_union_arm_case(neg=False))
 @example(_exists_union_arm_case(neg=True))
+@example(_union_retyped_case())
 @settings(
     max_examples=25,
     deadline=None,

@@ -1,0 +1,80 @@
+"""The fixpoint loop shared by the iterative operators: ``cut``
+signs a frame on its own checkpoint job, and a loop that is still
+changing its state after ``max_iter`` rounds raises instead of
+returning a partial result."""
+
+from __future__ import annotations
+
+import random
+
+import pytest
+from pyspark.sql import functions as F
+
+from mentor_rdf_parsers_spark.operators.canonicalize import connected_components
+from mentor_rdf_parsers_spark.operators.dedup import dedup_keep_first
+from mentor_rdf_parsers_spark.operators.iterutil import cut, fixed_plan
+from mentor_rdf_parsers_spark.operators.paths import transitive_closure
+from mentor_rdf_parsers_spark.operators.reasoning import forward_chain
+from tests.test_reasoning import _facts
+from tests.test_sparql_compat_join import _jobs_while
+
+
+def test_cut_signs_on_its_checkpoint_job(spark):
+    df = spark.range(500).select(
+        (F.col("id") % 37).alias("u"), (F.col("id") % 11).alias("v")
+    ).distinct()
+    with fixed_plan(spark):
+        (out, sig), jobs = _jobs_while(spark, lambda: cut(df))
+    assert len(jobs) == 1
+    ref = df.agg(
+        F.count("*").alias("n"),
+        F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")).alias("h"),
+    ).collect()[0]
+    assert sig == (ref["n"], ref["h"]) and sig[0] == 37 * 11
+    assert sorted(map(tuple, out.collect())) == sorted(map(tuple, df.collect()))
+
+
+def test_cut_empty_and_reliable(spark, tmp_path):
+    empty = spark.range(10).where("id < 0")
+    assert cut(empty)[1] == (0, None)
+    out, sig = cut(spark.range(5), str(tmp_path / "ckpt"))
+    assert sig[0] == 5 and out.count() == 5
+
+
+def test_connected_components_raises_when_exhausted(spark):
+    ids = random.Random(7).sample(range(1, 10**9), 64)
+    edges = spark.createDataFrame(
+        list(zip(ids, ids[1:])), "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match=r"connected_components.*max_iter=1"):
+        connected_components(edges, max_iter=1).collect()
+
+
+def test_transitive_closure_raises_when_exhausted(spark):
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match=r"transitive_closure.*max_iter=1"):
+        transitive_closure(edges, max_iter=1).collect()
+
+
+def test_forward_chain_raises_when_exhausted(spark):
+    t = _facts(spark, """@prefix : <http://ex/> .
+:x a :A .
+{ ?s a :A } => { ?s a :B } .
+{ ?s a :B } => { ?s a :C } .
+{ ?s a :C } => { ?s a :D } .
+""")
+    with pytest.raises(RuntimeError, match=r"forward_chain.*max_iter=1"):
+        forward_chain(t, max_iter=1, specialize=False).collect()
+    # rounds 1-3 derive B, C, D; round 4 derives nothing
+    out = forward_chain(t, max_iter=4, specialize=False)
+    types = {r["o"] for r in out.where(F.col("s") == "http://ex/x").collect()}
+    assert types == {f"http://ex/{c}" for c in "ABCD"}
+
+
+def test_dedup_keep_first_exact_raises_when_exhausted(spark):
+    ids = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
+    chain = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "a long, b long")
+    with pytest.raises(RuntimeError, match=r"dedup_keep_first.*max_iter=1"):
+        dedup_keep_first(ids, chain, exact=True, max_iter=1).collect()

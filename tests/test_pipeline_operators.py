@@ -62,8 +62,8 @@ def test_connected_components_chain_and_islands(spark):
 
 
 def test_connected_components_long_chain_converges_fast(spark):
-    # 200-long chain: naive hash-min would need 200 rounds; pointer
-    # doubling must close it within the 50-iteration cap.
+    # 200-long chain: naive hash-min would need 200 rounds; the star
+    # rounds must reach the fixpoint within 15 (it raises otherwise).
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(200)], "src long, dst long"
     )
@@ -711,14 +711,12 @@ class TestFixedPlan:
         )
 
         cores = spark.sparkContext.defaultParallelism
-        assert resolve_adaptive(spark, None, 10) is True  # tiny → keep AQE
+        assert resolve_adaptive(spark, 10) is True  # tiny → keep AQE
         assert resolve_adaptive(
-            spark, None, AUTO_FIXED_PLAN_ROWS_PER_CORE * cores + 1) is False
-        # explicit choice always wins
-        assert resolve_adaptive(spark, True, 10**12) is True
-        assert resolve_adaptive(spark, False, 10) is False
+            spark, AUTO_FIXED_PLAN_ROWS_PER_CORE * cores + 1) is False
 
-    def test_cc_result_identical_either_way(self, spark):
+    def test_cc_result_identical_either_way(self, spark, monkeypatch):
+        from mentor_rdf_parsers_spark.operators import iterutil
         from mentor_rdf_parsers_spark.operators.canonicalize import (
             connected_components,
         )
@@ -726,7 +724,10 @@ class TestFixedPlan:
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (10, 11), (12, 11)], "src long, dst long"
         )
+        spark.conf.set("spark.sql.adaptive.enabled", "true")
         a = sorted(map(tuple, connected_components(edges).collect()))
-        b = sorted(map(tuple, connected_components(
-            edges, adaptive_exec=True).collect()))
+        # a zero threshold sends the same 4 edges down the AQE-off path
+        monkeypatch.setattr(iterutil, "AUTO_FIXED_PLAN_ROWS_PER_CORE", 0)
+        assert iterutil.resolve_adaptive(spark, 1) is False
+        b = sorted(map(tuple, connected_components(edges).collect()))
         assert a == b == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)]
