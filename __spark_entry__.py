@@ -1531,8 +1531,8 @@ SELECT doc_id FROM k WHERE (strpos('0123456789abcdef', substr(h, 1, 1)) - 1) * 1
         "corpus_pack": """
 WITH t AS (
   SELECT doc_id, doc_id % 8 AS shard,
-    CAST(CASE WHEN trim(regexp_replace(lower(text), '\s+', ' ', 'g')) = '' THEN 0
-         ELSE len(string_split(trim(regexp_replace(lower(text), '\s+', ' ', 'g')), ' ')) END AS BIGINT)
+    CAST(CASE WHEN trim(regexp_replace(lower(text), '\\s+', ' ', 'g')) = '' THEN 0
+         ELSE len(string_split(trim(regexp_replace(lower(text), '\\s+', ' ', 'g')), ' ')) END AS BIGINT)
       AS n_tokens
   FROM documents
 ),

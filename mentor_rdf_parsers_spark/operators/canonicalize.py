@@ -6,15 +6,31 @@ single-document parser library); semantics come from the north_rule:
 connected-components (hash-min label propagation) pass over the edge
 DataFrame".
 
-Algorithm: Kiveris large-star / small-star (connected_components).
-Plain hash-min label propagation needs O(diameter) joins — a 1M-node
-alias chain would need 1M shuffles; alternating the two star
-operations converges in O(log n) rounds for any id order.  Each round
-is a step function run by ``iterutil.fixpoint``, which cuts lineage
-after every round (``localCheckpoint``, or reliable checkpoints under
-``checkpoint_dir`` for the north_rule's resumability — without a cut
-the plan doubles per round and the driver OOMs long before 100 TB),
-stops when the edge set is unchanged and raises at ``max_iter``.
+Algorithm: local contraction, then Kiveris large-star / small-star
+(connected_components).  Plain hash-min label propagation needs
+O(diameter) joins — a 1M-node alias chain would need 1M shuffles;
+alternating the two star operations converges in O(log n) rounds for
+any id order.  Each round is a step function run by
+``iterutil.fixpoint``, which cuts lineage after every round
+(``localCheckpoint``, or reliable checkpoints under ``checkpoint_dir``
+for the north_rule's resumability — without a cut the plan doubles per
+round and the driver OOMs long before 100 TB), stops when the edge set
+is unchanged and raises at ``max_iter``.
+
+Before the rounds, a ``mapInArrow`` kernel (:func:`_contract`) runs a
+vectorized numpy union-find over each partition's edges and replaces
+them by star edges node → min node of its local component.  That keeps
+connectivity, so the components are the same, and it costs no Spark job
+of its own.  It helps as far as the partitions hold whole components:
+when AQE coalesces a small edge set into one partition (the pipeline's
+usual case) the contraction already solves it and the loop stops after
+its one verification round.  It does not help scattered input: with AQE
+off and 16 shuffle partitions a scrambled 64-node chain still takes 6
+rounds and a 4096-node chain 11, as without the kernel.
+
+The id → term map of :func:`canonicalize_triples` is built from the
+sameAs endpoints only, and a 64-bit hash collision between two of them
+fails the rewrite's own job instead of merging the two terms silently.
 
 Scale notes:
 * all joins are equi-joins on a long key → sort-merge/shuffle-hash under
@@ -33,8 +49,10 @@ Scale notes:
 
 from __future__ import annotations
 
-from typing import Optional
+from typing import Iterator, Optional
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -43,15 +61,61 @@ from .iterutil import cut, fixpoint
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 
-def sameas_edges(triples: DataFrame) -> DataFrame:
-    """Extract owl:sameAs edges from a triples DataFrame as stable long
-    ids (xxhash64 of the term), keeping the id→term mapping implicit in
-    the output of :func:`canonicalize_triples`."""
-    e = triples.where(
+def _node_id(col: str) -> F.Column:
+    """Stable long node id of a term: xxhash64 of its string."""
+    return F.xxhash64(col)
+
+
+def _sameas(triples: DataFrame) -> DataFrame:
+    return triples.where(
         (F.col("p") == OWL_SAMEAS) & F.col("o_kind").isin("iri", "bnode")
     )
-    return e.select(
-        F.xxhash64("s").alias("src"), F.xxhash64("o").alias("dst")
+
+
+def sameas_edges(triples: DataFrame) -> DataFrame:
+    """Extract owl:sameAs edges from a triples DataFrame as stable long
+    ids (:func:`_node_id` of the term); :func:`canonicalize_triples`
+    maps them back to terms."""
+    return _sameas(triples).select(
+        _node_id("s").alias("src"), _node_id("o").alias("dst")
+    )
+
+
+def _contract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """``mapInArrow`` kernel: one partition's (u, v) edges → star edges
+    (u = node, v = min node of its component within the partition), one
+    per node that is not that min.
+
+    Vectorized union-find over the ``np.unique`` indices of the endpoints
+    (sorted, so the min index is the min id): every root hooks to the
+    smallest root across its edges (``np.minimum.at``), pointer jumping
+    then points every node at its root again, until each edge's ends
+    share a root. Hooks only ever point at a smaller index, so no cycle
+    forms and each component ends at its min."""
+    parts = [(b.column(0).to_numpy(), b.column(1).to_numpy()) for b in batches]
+    if not parts:
+        return
+    nodes, ends = np.unique(
+        np.concatenate([u for u, _ in parts] + [v for _, v in parts]),
+        return_inverse=True,
+    )
+    a, b = np.split(ends, 2)
+    root = np.arange(len(nodes))
+    while True:
+        ra, rb = root[a], root[b]
+        if np.array_equal(ra, rb):
+            break
+        lo = np.minimum(ra, rb)
+        np.minimum.at(root, ra, lo)
+        np.minimum.at(root, rb, lo)
+        while True:
+            up = root[root]
+            if np.array_equal(up, root):
+                break
+            root = up
+    moved = root != np.arange(len(nodes))
+    yield pa.RecordBatch.from_arrays(
+        [pa.array(nodes[moved]), pa.array(nodes[root[moved]])], names=["u", "v"]
     )
 
 
@@ -95,14 +159,16 @@ def connected_components(
     """(src:long, dst:long) undirected edges → (node:long, comp:long)
     where comp = min node id of the component.
 
-    Alternating large-star / small-star (Kiveris et al., "Connected
-    Components in MapReduce and Beyond"): converges in O(log n) rounds
-    for ANY id distribution — naive hash-min label propagation is
-    O(diameter), which on a 10^6-long alias chain with hashed (randomly
-    ordered) ids means 10^6 shuffle rounds; this needs ~20.  One round
-    is a step function for :func:`iterutil.fixpoint` (one groupBy + one
-    equi-join per phase, lineage cut after each phase); the edge set
-    stops changing once every node points at its component min, and
+    Each partition's deduplicated symmetric edges are first contracted
+    to local star edges (:func:`_contract`); then alternating
+    large-star / small-star (Kiveris et al., "Connected Components in
+    MapReduce and Beyond") converges in O(log n) rounds for ANY id
+    distribution — naive hash-min label propagation is O(diameter),
+    which on a 10^6-long alias chain with hashed (randomly ordered) ids
+    means 10^6 shuffle rounds; this needs ~20.  One round is a step
+    function for :func:`iterutil.fixpoint` (one groupBy + one equi-join
+    per phase, lineage cut after each phase); the edge set stops
+    changing once every node points at its component min, and
     ``max_iter`` rounds without that raise.
 
     Deterministic; returns one row per distinct node of the edge set.
@@ -115,7 +181,8 @@ def connected_components(
     sym = _both_ways(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     ).where(F.col("u") != F.col("v")).distinct()
-    star = fixpoint("connected_components", sym, step, max_iter, checkpoint_dir)
+    local = sym.mapInArrow(_contract, "u long, v long")
+    star = fixpoint("connected_components", local, step, max_iter, checkpoint_dir)
     # converged star edges point every non-min node at its component min
     mins = star.select(F.col("v").alias("node")).distinct()
     return star.select(F.col("u").alias("node"), F.col("v").alias("comp")).union(
@@ -124,38 +191,44 @@ def connected_components(
 
 
 def canonicalize_triples(
-    triples: DataFrame, components: Optional[DataFrame] = None,
-    max_iter: int = 50, checkpoint_dir: Optional[str] = None,
+    triples: DataFrame, max_iter: int = 50, checkpoint_dir: Optional[str] = None,
 ) -> DataFrame:
     """Rewrite s/o of every triple to its component-canonical
     representative (the lexicographically-min term of each owl:sameAs
     component), dropping the sameAs edges themselves and deduplicating.
 
-    Two-phase: (1) CC over xxhash64 node ids, (2) pick min *term string*
-    per component as the representative (deterministic and
-    human-meaningful, unlike the hash), (3) broadcast-or-shuffle map-side
-    rewrite of s and o.
+    Two-phase: (1) CC over :func:`_node_id` node ids, (2) pick min *term
+    string* per component as the representative (deterministic and
+    human-meaningful, unlike the hash), (3) broadcast-or-shuffle
+    map-side rewrite of s and o.  Only the sameAs endpoints are mapped
+    back from ids to terms; two endpoint terms sharing one id raise
+    (``raise_error`` in the same job) instead of merging.
     """
-    edges = sameas_edges(triples)
-    comps = components if components is not None else connected_components(
-        edges, max_iter=max_iter, checkpoint_dir=checkpoint_dir
+    comps = connected_components(
+        sameas_edges(triples), max_iter=max_iter, checkpoint_dir=checkpoint_dir
     )
 
-    # node-id → representative term string
-    terms = (
-        triples.select(F.col("s").alias("term"))
-        .union(triples.where(F.col("o_kind").isin("iri", "bnode")).select(F.col("o").alias("term")))
-        .distinct()
-        .withColumn("node", F.xxhash64("term"))
+    # node id → its one endpoint term → representative term
+    e = _sameas(triples)
+    ids = (
+        e.select(F.col("s").alias("term"))
+        .union(e.select(F.col("o").alias("term")))
+        .groupBy(_node_id("term").alias("node"))
+        .agg(F.min("term").alias("term"), F.max("term").alias("other"))
+        .select(
+            "node",
+            F.when(F.col("term") == F.col("other"), F.col("term")).otherwise(
+                F.raise_error(F.concat(
+                    F.lit("owl:sameAs node id collision: "),
+                    F.col("term"), F.lit(" / "), F.col("other"),
+                ))
+            ).alias("term"),
+        )
     )
-    rep = (
-        terms.join(comps, "node")
-        .groupBy("comp")
-        .agg(F.min("term").alias("rep"))
-    )
+    labeled = ids.join(comps, "node")
+    rep = labeled.groupBy("comp").agg(F.min("term").alias("rep"))
     mapping = (
-        terms.join(comps, "node")
-        .join(rep, "comp")
+        labeled.join(rep, "comp")
         .where(F.col("term") != F.col("rep"))
         .select("term", "rep")
     )

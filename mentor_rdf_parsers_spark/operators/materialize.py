@@ -11,10 +11,12 @@ North_rule requirements implemented here:
   Iceberg's `bucket(N, s)` transform), plus a salt column on the heavy
   side for hub subjects.
 * "per-partition lineage + triple-count metrics checkpointed … so any
-  stage resumes idempotently" — `write_stage` computes per-partition
-  (doc_count, triple_count, checksum) via an aggregation INSIDE the same
-  job, writes it next to the data, and `stage_complete` lets a driver
-  skip a finished stage on restart.
+  stage resumes idempotently" — `write_stage` persists the bucketed
+  frame, writes it, then aggregates (doc_count, triple_count, checksum)
+  per `s_bucket` — the layout and resume unit — from that cached frame
+  in a second, small job (no re-read of the written files) and writes
+  it next to the data; `stage_complete` lets a driver skip a finished
+  stage on restart.
 """
 
 from __future__ import annotations
@@ -50,12 +52,11 @@ def explode_salt(small: DataFrame, n_salt: int = 16) -> DataFrame:
 
 
 def partition_metrics(triples: DataFrame, stage: str) -> DataFrame:
-    """Per-shuffle-partition lineage: doc/triple counts + an
-    order-insensitive checksum (sum of row hashes — associative, so it
-    aggregates map-side)."""
+    """Per-bucket lineage of an `s_bucket`-tagged frame: doc/triple
+    counts + an order-insensitive checksum (sum of row hashes —
+    associative, so it aggregates map-side)."""
     return (
-        triples.withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
+        triples.groupBy("s_bucket")
         .agg(
             F.countDistinct("doc_id").alias("doc_count"),
             F.count("*").alias("triple_count"),
@@ -64,7 +65,7 @@ def partition_metrics(triples: DataFrame, stage: str) -> DataFrame:
         )
         .select(
             F.lit(stage).alias("stage"),
-            F.col("pid").alias("partition_id"),
+            F.col("s_bucket").alias("partition_id"),
             "doc_count",
             "triple_count",
             F.md5(F.col("chk").cast("string")).alias("checksum"),
@@ -90,7 +91,9 @@ def write_stage(
 
     Returns False if the stage output already existed (resume path).
     Layout: `{base}/{stage}/s_bucket=K/part-*.parquet` + a sibling
-    `{base}/{stage}_metrics/` lineage table. The bucket partition column
+    `{base}/{stage}_metrics/` lineage table (one row per `s_bucket`,
+    aggregated from the frame cached for the write; the cache is
+    released before returning). The bucket partition column
     gives the same subject-locality pruning an Iceberg `bucket(N, s)`
     transform would; switching to a real Iceberg catalog is a one-line
     `writeTo(...).partitionedBy(bucket(N, col('s')))` swap.
@@ -114,11 +117,13 @@ def write_stage(
             )
         else:
             bucketed = bucketed.repartition("s_bucket")
-    bucketed.write.mode("overwrite").partitionBy("s_bucket").parquet(out)
-    spark = triples.sparkSession
-    written = spark.read.parquet(out)
-    metrics = partition_metrics(written, stage)
-    metrics.write.mode("overwrite").parquet(os.path.join(base_dir, stage + "_metrics"))
+    bucketed = bucketed.persist()
+    try:
+        bucketed.write.mode("overwrite").partitionBy("s_bucket").parquet(out)
+        metrics = partition_metrics(bucketed, stage)
+        metrics.write.mode("overwrite").parquet(os.path.join(base_dir, stage + "_metrics"))
+    finally:
+        bucketed.unpersist()
     return True
 
 

@@ -4,13 +4,15 @@ materialize (the north_rule dataflow), resumable per stage.
 Each stage writes its output + a lineage/metrics table via
 operators.materialize and SKIPS itself on restart when its `_SUCCESS`
 marker exists — a killed job resumes at the first incomplete stage.
+Row counts come from a `DataFrame.observe` on each stage's own write
+job; only a stage skipped on resume is counted from its output.
 Run via spark-submit (scripts/run_pipeline.py packages this module with
 --py-files).
 
 Stage layout under `out_dir`:
 
     triples/            extracted quads, parquet, s_bucket=K partitions
-    triples_metrics/    per-partition (doc_count, triple_count, checksum)
+    triples_metrics/    per-s_bucket (doc_count, triple_count, checksum)
     errors/             quarantined documents
     linked/             triples + entity column from the alias dictionary
     canonical/          owl:sameAs-collapsed, deduplicated graph
@@ -39,7 +41,7 @@ from __future__ import annotations
 import os
 from typing import Optional
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.canonicalize import canonicalize_triples
@@ -61,23 +63,37 @@ def run_pipeline(
     strict: bool = False,
     checkpoint_dir: Optional[str] = None,
 ) -> dict:
-    """Run all stages idempotently; returns per-stage row counts.
+    """Run all stages idempotently; returns per-stage row counts
+    (`linked` counts rows with a non-null `entity`).
 
     `documents` is the interleaved-span table (BASELINE.json input_hint);
     `dictionary(alias, entity)` drives the broadcast linking pass (skipped
     when None)."""
-    stats: dict = {}
+    observed: dict = {}  # stage → Observation on its write job
+
+    def rows(stage: str):
+        return F.count("entity" if stage == "linked" else F.lit(1)).alias("rows")
+
+    def watch(df: DataFrame, stage: str) -> DataFrame:
+        observed[stage] = Observation()
+        return df.observe(observed[stage], rows(stage))
+
+    def count(stage: str) -> int:
+        if stage in observed:
+            return observed[stage].get["rows"]
+        # skipped on resume: count the output
+        return spark.read.parquet(os.path.join(out_dir, stage)).agg(rows(stage)).first()[0]
 
     # ---- stage 1: extract (documents → triples + errors quarantine) ----
     if not stage_complete(out_dir, "triples"):
         extracted = extract_triples(documents, strict=strict).persist()
         triples, errors = split_extract(extracted)
-        write_stage(triples, out_dir, "triples", n_buckets=n_buckets)
-        errors.write.mode("overwrite").parquet(os.path.join(out_dir, "errors"))
+        write_stage(watch(triples, "triples"), out_dir, "triples", n_buckets=n_buckets)
+        watch(errors, "errors").write.mode("overwrite").parquet(
+            os.path.join(out_dir, "errors")
+        )
         extracted.unpersist()
     triples = read_stage(spark, out_dir, "triples")
-    stats["triples"] = triples.count()
-    stats["errors"] = spark.read.parquet(os.path.join(out_dir, "errors")).count()
 
     # ---- stage 2: entity linking (broadcast dictionary) ----
     # literal objects are the mention surface forms; matches gain an
@@ -89,45 +105,25 @@ def run_pipeline(
                 dictionary,
                 mention_col="o",
             ).select("doc_id", "s", "p", "o", "entity", "link_score")
-            write_stage(linked, out_dir, "linked", n_buckets=n_buckets)
-        stats["linked"] = read_stage(spark, out_dir, "linked").where(
-            F.col("entity").isNotNull()
-        ).count()
+            write_stage(watch(linked, "linked"), out_dir, "linked", n_buckets=n_buckets)
 
     # ---- stage 3: canonicalize (owl:sameAs connected components) ----
     if not stage_complete(out_dir, "canonical"):
         canon = canonicalize_triples(triples, checkpoint_dir=checkpoint_dir)
-        write_stage(canon, out_dir, "canonical", n_buckets=n_buckets)
-    stats["canonical"] = read_stage(spark, out_dir, "canonical").count()
+        write_stage(watch(canon, "canonical"), out_dir, "canonical", n_buckets=n_buckets)
 
     # ---- stage 4: media (interleaved media spans → metadata table) ----
     # media spans are pass-through for the parsers; here they feed the
     # multimodal path: ref extraction → (stubbed) decode → metadata
-    media_dir = os.path.join(out_dir, "media_meta")
-    if not os.path.exists(os.path.join(media_dir, "_SUCCESS")):
+    if not stage_complete(out_dir, "media_meta"):
         from .operators.multimodal import decode_images, media_from_documents
 
         media = media_from_documents(documents)
         meta = decode_images(media).drop("features")
-        meta.write.mode("overwrite").parquet(media_dir)
-    stats["media"] = spark.read.parquet(media_dir).count()
+        watch(meta, "media_meta").write.mode("overwrite").parquet(
+            os.path.join(out_dir, "media_meta")
+        )
+    linked = ("linked",) if dictionary is not None else ()
+    stats = {stage: count(stage) for stage in ("triples", "errors", *linked, "canonical")}
+    stats["media"] = count("media_meta")
     return stats
-
-
-def spans_roundtrip_check(documents: DataFrame) -> int:
-    """Per-row invariant from BASELINE.json input_hint: the span sequence
-    (kind, text, media_ref, order) must survive the pipeline untouched.
-    The extract stage never mutates `documents`, so the check is
-    re-deriving each row's span signature and comparing it against itself
-    through a Spark round-trip (exchange + project). Returns the number
-    of violating rows (must be 0)."""
-    sig = F.md5(F.to_json(F.col("spans")))
-    before = documents.select("doc_id", sig.alias("sig_before"))
-    after = (
-        documents.repartition(8, "doc_id")
-        .select("doc_id", F.col("spans"))
-        .select("doc_id", sig.alias("sig_after"))
-    )
-    return before.join(after, "doc_id").where(
-        F.col("sig_before") != F.col("sig_after")
-    ).count()

@@ -16,7 +16,6 @@ from __future__ import annotations
 
 import argparse
 import json
-import sys
 
 from pyspark.sql import SparkSession
 
@@ -41,7 +40,7 @@ def main() -> None:
 
     from pyspark.sql import functions as F
 
-    from mentor_rdf_parsers_spark.pipeline import run_pipeline, spans_roundtrip_check
+    from mentor_rdf_parsers_spark.pipeline import run_pipeline
     from mentor_rdf_parsers_spark.sources.testdata import (
         SOURCE_NS,
         documents_as_rdf_docs,
@@ -49,7 +48,6 @@ def main() -> None:
     )
 
     docs = documents_as_rdf_docs(spark, args.sf_dir)
-    bad_spans = spans_roundtrip_check(docs)
     dictionary = (
         load_table(spark, args.sf_dir, "documents")
         .select("source").distinct()
@@ -66,10 +64,8 @@ def main() -> None:
         n_buckets=args.buckets, checkpoint_dir=args.checkpoint_dir,
     )
     stats["wall_sec"] = round(time.time() - t0, 2)
-    stats["span_invariant_violations"] = bad_spans
     print(json.dumps(stats))
     spark.stop()
-    sys.exit(0 if bad_spans == 0 else 1)
 
 
 if __name__ == "__main__":

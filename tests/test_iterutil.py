@@ -6,6 +6,7 @@ returning a partial result."""
 from __future__ import annotations
 
 import random
+from contextlib import contextmanager
 
 import pytest
 from pyspark.sql import functions as F
@@ -41,13 +42,30 @@ def test_cut_empty_and_reliable(spark, tmp_path):
     assert sig[0] == 5 and out.count() == 5
 
 
+@contextmanager
+def _conf(spark, **settings):
+    old = {k: spark.conf.get(k) for k in settings}
+    for k, v in settings.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in old.items():
+            spark.conf.set(k, v)
+
+
 def test_connected_components_raises_when_exhausted(spark):
+    # scattered over 16 partitions, the per-partition contraction cannot
+    # solve the chain, so the star rounds must run (6 here); AQE would
+    # coalesce the 64 nodes into one partition, where it could
     ids = random.Random(7).sample(range(1, 10**9), 64)
     edges = spark.createDataFrame(
         list(zip(ids, ids[1:])), "src long, dst long"
     )
-    with pytest.raises(RuntimeError, match=r"connected_components.*max_iter=1"):
-        connected_components(edges, max_iter=1).collect()
+    with _conf(spark, **{"spark.sql.adaptive.enabled": "false",
+                         "spark.sql.shuffle.partitions": "16"}):
+        with pytest.raises(RuntimeError, match=r"connected_components.*max_iter=1"):
+            connected_components(edges, max_iter=1).collect()
 
 
 def test_transitive_closure_raises_when_exhausted(spark):

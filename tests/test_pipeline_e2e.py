@@ -1,15 +1,20 @@
 """End-to-end pipeline: extract → link → canonicalize → materialize with
-stage resume, lineage metrics, error quarantine and the span-sequence
-invariant (BASELINE.json input_hint)."""
+stage resume, lineage metrics, error quarantine, counts taken from the
+write jobs, and the interleaved media spans of the input
+(BASELINE.json input_hint)."""
 
 from __future__ import annotations
 
 import os
+import shutil
+import time
+import uuid
 
 from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from mentor_rdf_parsers_spark.operators.materialize import read_metrics
-from mentor_rdf_parsers_spark.pipeline import run_pipeline, spans_roundtrip_check
+from mentor_rdf_parsers_spark.pipeline import run_pipeline
 from mentor_rdf_parsers_spark.schemas import DOCUMENTS
 from mentor_rdf_parsers_spark.sources.testdata import (
     SOURCE_NS,
@@ -41,9 +46,11 @@ def test_pipeline_stages_and_resume(spark, tmp_path):
     assert stats["canonical"] == stats["triples"]  # no sameAs edges → no collapse
     assert stats["media"] == 167  # every 3rd doc carries a media span
 
-    # lineage metrics: totals reconcile with the stage row count
+    # lineage metrics: totals reconcile with the stage row count, one
+    # row per s_bucket
     m = read_metrics(spark, out, "triples")
     assert m.agg(F.sum("triple_count")).collect()[0][0] == 2000
+    assert sorted(r["partition_id"] for r in m.collect()) == list(range(64))
 
     # resume: stage dirs untouched on second run (same _SUCCESS mtimes)
     marker = os.path.join(out, "triples", "_SUCCESS")
@@ -51,6 +58,8 @@ def test_pipeline_stages_and_resume(spark, tmp_path):
     stats2 = run_pipeline(spark, docs, out, dictionary=_dictionary(spark))
     assert stats2["triples"] == 2000
     assert os.path.getmtime(marker) == mtime
+    # a resumed run counts the skipped stages from their output
+    assert stats2 == stats
 
 
 def test_pipeline_quarantines_bad_docs(spark, tmp_path):
@@ -67,9 +76,57 @@ def test_pipeline_quarantines_bad_docs(spark, tmp_path):
 
 def test_span_sequence_invariant(spark):
     docs = documents_as_rdf_docs(spark, SF)
-    assert spans_roundtrip_check(docs) == 0
     # media spans present and interleaved on every 3rd doc
     with_media = docs.where(
         F.exists("spans", lambda s: s["kind"] == "media")
     ).count()
     assert with_media == docs.count() // 3 + (1 if docs.count() % 3 else 0)
+
+
+def _wait_for_listener(spark):
+    """Return once the status tracker has seen every job started so far:
+    it learns of jobs through the listener bus, which is FIFO, so the
+    start of a fresh probe job arrives after theirs."""
+    sc = spark.sparkContext
+    probe = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(probe, "listener probe")
+    try:
+        spark.range(1).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    deadline = time.monotonic() + 30
+    while not sc.statusTracker().getJobIdsForGroup(probe):
+        assert time.monotonic() < deadline
+        time.sleep(0.05)
+
+
+def test_pipeline_reads_nothing_back(spark, tmp_path, monkeypatch):
+    """A fresh run takes every stage count from the write jobs: no job
+    starts after the last write (media). Resuming with one stage removed
+    recomputes it and still reports the fresh run's stats."""
+    out = str(tmp_path / "kg")
+    docs = documents_as_rdf_docs(spark, SF)
+    sc = spark.sparkContext
+    during, after = (f"{name}-{uuid.uuid4().hex}" for name in ("run", "after"))
+    parquet = DataFrameWriter.parquet
+
+    def spy(self, path, *args, **kwargs):
+        parquet(self, path, *args, **kwargs)
+        if path.endswith("media_meta"):
+            sc.setJobGroup(after, "after the media write")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", spy)
+    sc.setJobGroup(during, "fresh pipeline run")
+    try:
+        stats = run_pipeline(spark, docs, out, dictionary=_dictionary(spark))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    _wait_for_listener(spark)
+    tracker = sc.statusTracker()
+    assert tracker.getJobIdsForGroup(during)
+    assert list(tracker.getJobIdsForGroup(after)) == []
+    assert stats == {"triples": 2000, "errors": 0, "linked": 500,
+                     "canonical": 2000, "media": 167}
+
+    shutil.rmtree(os.path.join(out, "canonical"))
+    assert run_pipeline(spark, docs, out, dictionary=_dictionary(spark)) == stats
