@@ -21,12 +21,15 @@ Before the rounds, a ``mapInArrow`` kernel (:func:`_contract`) runs a
 vectorized numpy union-find over each partition's edges and replaces
 them by star edges node → min node of its local component.  That keeps
 connectivity, so the components are the same, and it costs no Spark job
-of its own.  It helps as far as the partitions hold whole components:
-when AQE coalesces a small edge set into one partition (the pipeline's
-usual case) the contraction already solves it and the loop stops after
-its one verification round.  It does not help scattered input: with AQE
-off and 16 shuffle partitions a scrambled 64-node chain still takes 6
-rounds and a 4096-node chain 11, as without the kernel.
+of its own.  It helps as far as the partitions hold whole components.
+When every edge sits in one partition — AQE coalesces a small edge set
+so, the pipeline's usual case — the local union-find saw the whole graph
+and its stars already are the converged answer: the initial cut observes
+min and max ``spark_partition_id()`` of the contracted edges on its own
+job, and when they agree no round runs at all.  It does not help
+scattered input: with AQE off and 16 shuffle partitions a scrambled
+64-node chain still takes 6 rounds and a 4096-node chain 11, as without
+the kernel.
 
 The id → term map of :func:`canonicalize_triples` is built from the
 sameAs endpoints only, and a 64-bit hash collision between two of them
@@ -53,7 +56,7 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pyarrow as pa
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .iterutil import cut, fixpoint
@@ -169,7 +172,8 @@ def connected_components(
     function for :func:`iterutil.fixpoint` (one groupBy + one equi-join
     per phase, lineage cut after each phase); the edge set stops
     changing once every node points at its component min, and
-    ``max_iter`` rounds without that raise.
+    ``max_iter`` rounds without that raise.  Edges that all sat in one
+    partition are solved by the contraction alone, and no round runs.
 
     Deterministic; returns one row per distinct node of the edge set.
     """
@@ -181,8 +185,16 @@ def connected_components(
     sym = _both_ways(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     ).where(F.col("u") != F.col("v")).distinct()
-    local = sym.mapInArrow(_contract, "u long, v long")
-    star = fixpoint("connected_components", local, step, max_iter, checkpoint_dir)
+    parts = Observation()
+    local = sym.mapInArrow(_contract, "u long, v long").observe(
+        parts,
+        F.min(F.spark_partition_id()).alias("lo"),
+        F.max(F.spark_partition_id()).alias("hi"),
+    )
+    star, sig = cut(local, checkpoint_dir)
+    if parts.get["lo"] != parts.get["hi"]:  # None for no edges at all
+        star = fixpoint("connected_components", star, step, max_iter,
+                        checkpoint_dir, sig=sig)
     # converged star edges point every non-min node at its component min
     mins = star.select(F.col("v").alias("node")).distinct()
     return star.select(F.col("u").alias("node"), F.col("v").alias("comp")).union(

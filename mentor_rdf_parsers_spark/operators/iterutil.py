@@ -20,9 +20,15 @@ partial result.
 
 ``fixed_plan`` scopes adaptive query execution OFF for the loop and
 restores the session setting afterwards; :func:`fixpoint` decides from
-the initial state's row count (:func:`resolve_adaptive`). Whether AQE
-helps an iterative loop depends on the regime, and both sides were
-measured with interleaved A/B on identical inputs:
+the initial state's row count (:func:`resolve_adaptive`). The setting is
+session-wide, so overlapping loops (the pipeline runs stages on several
+threads) share one scope per session: the first to enter saves
+the setting and the last to leave restores it. A query another thread
+plans meanwhile runs with AQE off too — slower or faster, never
+different in its result.
+
+Whether AQE helps an iterative loop depends on the regime, and both
+sides were measured with interleaved A/B on identical inputs:
 
 * **Work-dominated rounds** (big input, partitions sized to the data):
   the round shape is fixed — one groupBy + one equi-join with stable
@@ -48,6 +54,7 @@ by salting (operators/materialize.py:with_salt).
 
 from __future__ import annotations
 
+import threading
 from contextlib import contextmanager
 from typing import Callable, Optional, Tuple
 
@@ -60,6 +67,11 @@ from pyspark.sql import functions as F
 AUTO_FIXED_PLAN_ROWS_PER_CORE = 50_000
 
 _AQE_KEYS = ("spark.sql.adaptive.enabled",)
+
+# session → [open fixed_plan scopes, the AQE settings saved by the first];
+# module-wide because a session's conf is shared by every thread using it
+_scopes: dict = {}
+_scopes_lock = threading.Lock()
 
 
 def resolve_adaptive(spark, rows: int) -> bool:
@@ -74,25 +86,37 @@ def resolve_adaptive(spark, rows: int) -> bool:
 def fixed_plan(spark, adaptive_exec: bool = False):
     """Disable AQE inside an iterative fixed-shape loop (no-op when
     ``adaptive_exec=True`` — the caller's escape hatch to keep the
-    session behavior)."""
+    session behavior). Safe to overlap across threads: the scopes open
+    on one session are reference-counted, and only the last one out
+    restores what the first one in saved. Until then every query the
+    session plans, on any thread, runs with AQE off."""
     if adaptive_exec:
         yield
         return
-    old = {}
-    for k in _AQE_KEYS:
-        try:
-            old[k] = spark.conf.get(k)
-        except Exception:
-            old[k] = None
-        spark.conf.set(k, "false")
+    with _scopes_lock:
+        scope = _scopes.get(spark)
+        if scope is None:
+            saved = {}
+            for k in _AQE_KEYS:
+                try:
+                    saved[k] = spark.conf.get(k)
+                except Exception:
+                    saved[k] = None
+                spark.conf.set(k, "false")
+            scope = _scopes[spark] = [0, saved]
+        scope[0] += 1
     try:
         yield
     finally:
-        for k, v in old.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        with _scopes_lock:
+            scope[0] -= 1
+            if scope[0] == 0:
+                del _scopes[spark]
+                for k, v in scope[1].items():
+                    if v is None:
+                        spark.conf.unset(k)
+                    else:
+                        spark.conf.set(k, v)
 
 
 def cut(df: DataFrame, checkpoint_dir: Optional[str] = None) -> Tuple[DataFrame, tuple]:
@@ -115,13 +139,16 @@ def cut(df: DataFrame, checkpoint_dir: Optional[str] = None) -> Tuple[DataFrame,
 def fixpoint(
     name: str, state: DataFrame, step: Callable[[DataFrame], DataFrame],
     max_iter: int, checkpoint_dir: Optional[str] = None,
+    sig: Optional[tuple] = None,
 ) -> DataFrame:
     """Run ``state = cut(step(state))`` until the state's signature stops
     changing; AQE for the rounds is resolved from the initial state's
-    count. Raises ``RuntimeError`` when round ``max_iter`` still
-    changed the state."""
+    count. A given ``sig`` says ``state`` is already cut and signed so.
+    Raises ``RuntimeError`` when round ``max_iter`` still changed the
+    state."""
     spark = state.sparkSession
-    state, sig = cut(state, checkpoint_dir)
+    if sig is None:
+        state, sig = cut(state, checkpoint_dir)
     with fixed_plan(spark, resolve_adaptive(spark, sig[0])):
         for _ in range(max_iter):
             state, new_sig = cut(step(state), checkpoint_dir)

@@ -11,12 +11,13 @@ from py4j.protocol import Py4JJavaError
 from pyspark.errors import SparkRuntimeException
 from pyspark.sql import functions as F
 
-from mentor_rdf_parsers_spark.operators import canonicalize
+from mentor_rdf_parsers_spark.operators import canonicalize, iterutil
 from mentor_rdf_parsers_spark.operators.canonicalize import (
     _contract,
     canonicalize_triples,
     connected_components,
 )
+from mentor_rdf_parsers_spark.operators.iterutil import cut
 from tests.test_iterutil import _conf
 
 COLS = ("doc_id string, s_kind string, s string, p_kind string, p string, "
@@ -76,15 +77,37 @@ def test_contract_descending_ids():
     assert _kernel([(5, 6), (40, 41), (6, 40)]) == [(6, 5), (40, 5), (41, 5)]
 
 
-def test_single_partition_chain_converges_in_one_round(spark):
+def _count_cuts(monkeypatch) -> list:
+    """Count lineage cuts: the initial one and one per round phase."""
+    calls = []
+
+    def counted(df, checkpoint_dir=None):
+        calls.append(1)
+        return cut(df, checkpoint_dir)
+
+    monkeypatch.setattr(canonicalize, "cut", counted)
+    monkeypatch.setattr(iterutil, "cut", counted)
+    return calls
+
+
+def test_single_partition_chain_needs_no_round(spark, monkeypatch):
     ids = random.Random(3).sample(range(-10**12, 10**12), 300)
     pairs = list(zip(ids, ids[1:])) + [(ids[5], ids[77]), (11, 12), (12, 13)]
     random.Random(4).shuffle(pairs)
     edges = spark.createDataFrame(pairs, "src long, dst long")
-    # one partition: the contraction solves it, the loop only verifies
+    cuts = _count_cuts(monkeypatch)
+    # one partition: the contraction solves it, and no round runs
     with _conf(spark, **{"spark.sql.shuffle.partitions": "1"}):
         out = connected_components(edges, max_iter=1).collect()
     assert {r["node"]: r["comp"] for r in out} == _union_find(pairs)
+    assert len(cuts) == 1
+
+
+def test_no_edges_need_no_round(spark, monkeypatch):
+    cuts = _count_cuts(monkeypatch)
+    edges = spark.createDataFrame([], "src long, dst long")
+    assert connected_components(edges).collect() == []
+    assert len(cuts) == 1
 
 
 def test_canonicalize_raises_on_node_id_collision(spark, monkeypatch):

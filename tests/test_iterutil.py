@@ -6,6 +6,10 @@ returning a partial result."""
 from __future__ import annotations
 
 import random
+import sys
+import threading
+import time
+from concurrent.futures import ThreadPoolExecutor
 from contextlib import contextmanager
 
 import pytest
@@ -40,6 +44,63 @@ def test_cut_empty_and_reliable(spark, tmp_path):
     assert cut(empty)[1] == (0, None)
     out, sig = cut(spark.range(5), str(tmp_path / "ckpt"))
     assert sig[0] == 5 and out.count() == 5
+
+
+def test_fixed_plan_overlapping_scopes_restore_once(spark):
+    """Two threads' fixed-plan scopes overlap: A enters, B enters, A
+    leaves, B leaves. B must still run with AQE off after A left, and
+    the session setting from before A must come back after B."""
+    key = "spark.sql.adaptive.enabled"
+    step = threading.Barrier(2, timeout=60)
+
+    def a():
+        with fixed_plan(spark):
+            step.wait()  # 1: A is in
+            step.wait()  # 2: B is in
+        step.wait()      # 3: A is out
+
+    def b():
+        step.wait()
+        with fixed_plan(spark):
+            step.wait()
+            step.wait()
+            return spark.conf.get(key)
+
+    with _conf(spark, **{key: "true"}):
+        with ThreadPoolExecutor(2) as pool:
+            fa, fb = pool.submit(a), pool.submit(b)
+            fa.result()
+            inside_b = fb.result()
+        assert inside_b == "false"
+        assert spark.conf.get(key) == "true"
+
+
+def test_fixed_plan_scopes_under_thread_stress(spark):
+    """Eight threads open and close fixed-plan scopes at random with a
+    short switch interval: inside every scope AQE is off, and after the
+    last one the session setting is back."""
+    key = "spark.sql.adaptive.enabled"
+    interval = sys.getswitchinterval()
+
+    def churn(seed):
+        rng = random.Random(seed)
+        seen = set()
+        for _ in range(10):
+            with fixed_plan(spark):
+                time.sleep(rng.random() / 100)
+                seen.add(spark.conf.get(key))
+        return seen
+
+    sys.setswitchinterval(1e-5)
+    try:
+        with _conf(spark, **{key: "true"}):
+            with ThreadPoolExecutor(8) as pool:
+                futures = [pool.submit(churn, i) for i in range(8)]
+                seen = set().union(*(f.result(timeout=120) for f in futures))
+            assert seen == {"false"}
+            assert spark.conf.get(key) == "true"
+    finally:
+        sys.setswitchinterval(interval)
 
 
 @contextmanager

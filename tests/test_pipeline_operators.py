@@ -720,14 +720,29 @@ class TestFixedPlan:
         from mentor_rdf_parsers_spark.operators.canonicalize import (
             connected_components,
         )
+        from tests.test_iterutil import _conf
 
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (10, 11), (12, 11)], "src long, dst long"
         )
         spark.conf.set("spark.sql.adaptive.enabled", "true")
+        # AQE coalesces the 4 edges into one partition: the contraction
+        # answers alone
         a = sorted(map(tuple, connected_components(edges).collect()))
-        # a zero threshold sends the same 4 edges down the AQE-off path
+        # spread over 4 partitions, with a zero threshold, the same
+        # edges go through the AQE-off loop
         monkeypatch.setattr(iterutil, "AUTO_FIXED_PLAN_ROWS_PER_CORE", 0)
         assert iterutil.resolve_adaptive(spark, 1) is False
-        b = sorted(map(tuple, connected_components(edges).collect()))
+        scopes = []
+        fixed_plan = iterutil.fixed_plan
+
+        def spy(spark, adaptive_exec=False):
+            scopes.append(adaptive_exec)
+            return fixed_plan(spark, adaptive_exec)
+
+        monkeypatch.setattr(iterutil, "fixed_plan", spy)
+        with _conf(spark, **{"spark.sql.adaptive.enabled": "false",
+                             "spark.sql.shuffle.partitions": "4"}):
+            b = sorted(map(tuple, connected_components(edges).collect()))
+        assert scopes == [False]
         assert a == b == [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (12, 10)]

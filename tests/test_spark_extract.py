@@ -14,6 +14,7 @@ from mentor_rdf_parsers_spark.operators.extract import extract_triples, split_ex
 from mentor_rdf_parsers_spark.parsing.compare import quads_match
 from mentor_rdf_parsers_spark.parsing.golden import parse_nt12
 from mentor_rdf_parsers_spark.parsing.terms import row_to_quad
+from mentor_rdf_parsers_spark.schemas import DOCUMENTS
 from mentor_rdf_parsers_spark.sources.fixtures import load_fixture_documents
 
 
@@ -35,15 +36,29 @@ def test_extract_counts(spark, rdf_docs):
     assert errors.count() == 0
 
 
-def test_negative_docs_quarantined_not_failed(spark, extracted):
-    """Every negative fixture must produce >=1 error row and the job must
-    not fail; in strict mode a bad doc emits zero triples."""
-    docs = load_fixture_documents(spark)
-    neg_ids = {r[0] for r in docs.where("expect = 'negative'").select("doc_id").collect()}
-    triples, errors = split_extract(extracted)
+def _docs(spark, *rows):
+    """Documents of one text span each: (doc_id, syntax, text)."""
+    return spark.createDataFrame(
+        [(d, [("text", text, None, 0)], syntax, None) for d, syntax, text in rows],
+        DOCUMENTS,
+    )
+
+
+def test_negative_docs_quarantined_not_failed(spark, rdf_docs):
+    """Every unparseable document must produce >=1 error row and the job
+    must not fail; in strict mode a bad doc emits zero triples, even the
+    ones before its error."""
+    bad = _docs(
+        spark,
+        ("bad/nt", "ntriples", "<http://ex/s> <http://ex/p> .\n"),
+        ("bad/ttl", "turtle", '<http://ex/s> <http://ex/p> <http://ex/o> .\n<http://ex/s> "x\n'),
+        ("bad/nq", "nquads", "this is not rdf at all ~~~\n"),
+    )
+    docs = rdf_docs.unionByName(bad)
+    triples, errors = split_extract(extract_triples(docs, strict=True))
     err_ids = {r[0] for r in errors.select("doc_id").distinct().collect()}
-    missing = neg_ids - err_ids
-    assert not missing, sorted(missing)[:10]
+    assert err_ids == {"bad/nt", "bad/ttl", "bad/nq"}
+    assert triples.count() == 4 * rdf_docs.count() > 0
     bad_with_triples = (
         triples.join(errors.select("doc_id").distinct(), "doc_id", "left_semi").count()
     )
@@ -110,13 +125,20 @@ def test_span_sequence_invariant(spark, rdf_docs):
     assert media > 100
 
 
-def test_skolemization_cross_doc_distinct(spark):
+def test_skolemization_cross_doc_distinct(spark, rdf_docs):
     """Replicated docs (#k suffix) produce distinct bnode labels — the
     cross-file collision-freedom createFileBlankNodeIdGenerator gives."""
-    docs = load_fixture_documents(spark, syntaxes=["turtle"], replicate=2, include_negative=False)
-    out = extract_triples(docs, strict=True)
-    triples, _ = split_extract(out)
+    from mentor_rdf_parsers_spark.sources.fixtures import replicate_documents
+
+    bnodes = _docs(spark, *(
+        (f"bn/{i}", "turtle", "_:b0 <http://ex/p> [ <http://ex/q> _:b1 ] .\n")
+        for i in range(3)
+    ))
+    docs = replicate_documents(rdf_docs.unionByName(bnodes), 2)
+    triples, _ = split_extract(extract_triples(docs, strict=True))
     bn = triples.where("s_kind = 'bnode'").select("doc_id", "s").distinct()
+    # 3 documents × 2 copies, each with a labelled and an anonymous subject
+    assert bn.count() == 12
     clashes = (
         bn.groupBy("s").agg(F.countDistinct("doc_id").alias("n")).where("n > 1").count()
     )
