@@ -1144,7 +1144,7 @@ SELECT query_id, neighbor_id, sim, CAST(rk AS BIGINT) AS rk FROM r WHERE rk <= {
 
 
 def _shingle_expr(n: int = 3) -> str:
-    """DuckDB word-n-gram shingles matching linking.shingle_tokens
+    """DuckDB word-n-gram shingles matching linking.shingles_from_tokens
     (expects a CTE exposing the token list as `t`)."""
     parts = " || ' ' || ".join(f"t[i+{j}]" if j else "t[i]" for j in range(n))
     return (
@@ -1163,7 +1163,7 @@ def _hex_byte_sql(col: str, i: int) -> str:
 
 
 def _simhash_sql() -> str:
-    """DuckDB expression replicating operators.dedup.simhash32."""
+    """DuckDB expression replicating operators.dedup.simhash_fingerprints."""
     bit_sums = []
     for b in range(32):
         nib = f"(strpos('0123456789abcdef', substr(md5(tok), {1 + b // 4}, 1)) - 1)"

@@ -46,8 +46,12 @@ def golden_pairs(syntaxes=("turtle", "trig", "ntriples", "nquads", "n3")) -> lis
 def corpus_precision_recall(spark: SparkSession) -> dict:
     """Run every golden-pair input through the Spark extract stage and
     compare against its golden quads. Returns corpus-level precision /
-    recall over all quads plus the per-document match rate."""
+    recall over all quads plus the per-document match rate. Raises
+    ``ValueError`` when there are no golden pairs: P/R over 0 documents
+    measures nothing."""
     pairs = golden_pairs()
+    if not pairs:
+        raise ValueError(f"no golden pairs under {REF}: P/R over 0 documents")
     rows = []
     goldens = {}
     for syntax, inp, gold in pairs:

@@ -44,9 +44,6 @@ _CLUSTER = 0x1F43B675
 _TIMECODE = 0xE7
 _SIMPLE_BLOCK = 0xA3
 
-_MASTERS = {_EBML, _SEGMENT, _INFO, _TRACKS, _TRACK_ENTRY, _VIDEO,
-            _AUDIO, _CLUSTER}
-
 
 def is_ebml(data: bytes) -> bool:
     return data[:4] == b"\x1a\x45\xdf\xa3"

@@ -56,34 +56,6 @@ def decode_alaw(codes: np.ndarray) -> np.ndarray:
     return out / 32768.0
 
 
-def encode_mulaw(samples: np.ndarray) -> bytes:
-    """float in [-1, 1] → µ-law bytes (ITU-T G.711 segment compressor);
-    the test-fixture inverse of :func:`decode_mulaw`."""
-    x = np.clip(np.asarray(samples, dtype=np.float64) * 32768.0,
-                -32635, 32635).astype(np.int32)
-    sign = np.where(x < 0, 0x80, 0)
-    mag = np.abs(x) + 0x84
-    exponent = (np.floor(np.log2(mag)).astype(np.int32) - 7).clip(0, 7)
-    mantissa = (mag >> (exponent + 3)) & 0x0F
-    return bytes((~(sign | (exponent << 4) | mantissa) & 0xFF
-                  ).astype(np.uint8).tobytes())
-
-
-def encode_alaw(samples: np.ndarray) -> bytes:
-    """float in [-1, 1] → A-law bytes (the canonical linear2alaw:
-    13-bit domain, per-segment mantissa shift, 0x55/0xD5 toggle)."""
-    x = np.clip(np.asarray(samples, dtype=np.float64) * 32768.0,
-                -32768, 32767).astype(np.int32)
-    x13 = x >> 3
-    mask = np.where(x13 >= 0, 0xD5, 0x55)
-    v = np.where(x13 >= 0, x13, -x13 - 1)
-    seg = ((v > 0x1F).astype(np.int32) + (v > 0x3F) + (v > 0x7F)
-           + (v > 0xFF) + (v > 0x1FF) + (v > 0x3FF) + (v > 0x7FF))
-    mantissa = np.where(seg < 2, (v >> 1) & 0x0F,
-                        (v >> seg) & 0x0F)
-    return bytes((((seg << 4) | mantissa) ^ mask).astype(np.uint8).tobytes())
-
-
 _FLOAT_DTYPES = {4: "<f4", 8: "<f8"}
 
 
@@ -116,14 +88,3 @@ def decode_wav_ext(data: bytes) -> Optional[tuple[int, np.ndarray, int]]:
         s = s[: len(s) - len(s) % channels].reshape(-1, channels).mean(
             axis=1).astype(np.float32)
     return (int(len(s) * 1000 / rate), s, rate)
-
-
-def make_wav(body: bytes, tag: int, channels: int, rate: int,
-             bits: int) -> bytes:
-    """Minimal RIFF/WAVE wrapper for fixture payloads."""
-    byterate = rate * channels * bits // 8
-    fmt = struct.pack("<HHIIHH", tag, channels, rate, byterate,
-                      channels * bits // 8, bits)
-    out = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    out += b"data" + struct.pack("<I", len(body)) + body
-    return b"RIFF" + struct.pack("<I", 4 + len(out)) + b"WAVE" + out

@@ -165,83 +165,6 @@ def encode_bmp(arr: np.ndarray) -> bytes:
     return header + pixels
 
 
-def _bmp_palette_header(idx: np.ndarray, palette: np.ndarray,
-                        compression: int, body_len: int,
-                        bpp: int) -> bytes:
-    h, w = idx.shape
-    pal = np.zeros((1 << bpp, 4), dtype=np.uint8)
-    pal[: len(palette), :3] = np.asarray(palette, dtype=np.uint8)[:, [2, 1, 0]]
-    pixel_off = 54 + pal.size
-    return (b"BM" + struct.pack("<IHHI", pixel_off + body_len, 0, 0,
-                                pixel_off)
-            + struct.pack("<IiiHHIIiiII", 40, w, h, 1, bpp, compression,
-                          body_len, 2835, 2835, len(palette), 0)
-            + pal.tobytes())
-
-
-def encode_bmp_rle8(idx: np.ndarray, palette: np.ndarray) -> bytes:
-    """(H, W) uint8 palette indices + (N, 3) RGB palette → BI_RLE8 BMP
-    (bottom-up). Runs ≥2 become encoded runs; isolated stretches use
-    absolute mode when ≥3 long (exercising both decoder paths), else
-    length-1 runs. Round-trip partner of :func:`decode_bmp`."""
-    a = np.asarray(idx, dtype=np.uint8)
-    h, w = a.shape
-    out = bytearray()
-    for row in a[::-1]:  # file order is bottom-up
-        x = 0
-        while x < w:
-            run = 1
-            while x + run < w and row[x + run] == row[x] and run < 255:
-                run += 1
-            if run >= 2:
-                out += bytes([run, row[x]])
-                x += run
-                continue
-            # literal stretch: until the next run of ≥3 (or row end)
-            j = x
-            while j < w and j - x < 255:
-                if j + 2 < w and row[j] == row[j + 1] == row[j + 2]:
-                    break
-                j += 1
-            lits = row[x:j]
-            if len(lits) >= 3:
-                out += bytes([0, len(lits)]) + lits.tobytes()
-                if len(lits) & 1:
-                    out += b"\x00"  # pad to 16-bit boundary
-            else:
-                for v in lits:
-                    out += bytes([1, v])
-            x = j
-        out += b"\x00\x00"  # end of line
-    out += b"\x00\x01"  # end of bitmap
-    return _bmp_palette_header(a, palette, 1, len(out), 8) + bytes(out)
-
-
-def encode_bmp_rle4(idx: np.ndarray, palette: np.ndarray) -> bytes:
-    """(H, W) indices <16 + palette → BI_RLE4 BMP (bottom-up), emitted
-    as simple alternating-nibble runs."""
-    a = np.asarray(idx, dtype=np.uint8)
-    if a.max(initial=0) > 15:
-        raise ValueError("RLE4 indices must be < 16")
-    h, w = a.shape
-    out = bytearray()
-    for row in a[::-1]:
-        x = 0
-        while x < w:
-            # run of the alternating pair (row[x], row[x+1], row[x], ...)
-            v0 = row[x]
-            v1 = row[x + 1] if x + 1 < w else v0
-            run = 1
-            while x + run < w and row[x + run] == (v0, v1)[run & 1] \
-                    and run < 255:
-                run += 1
-            out += bytes([run, (int(v0) << 4) | int(v1)])
-            x += run
-        out += b"\x00\x00"
-    out += b"\x00\x01"
-    return _bmp_palette_header(a, palette, 2, len(out), 4) + bytes(out)
-
-
 # ---------------------------------------------------------------- netpbm
 
 def is_pnm(data: bytes) -> bool:
@@ -281,16 +204,6 @@ def decode_pnm(data: bytes) -> np.ndarray:
         raise ValueError("PNM: truncated pixel data")
     arr = px.reshape(h, w, ch)
     return np.repeat(arr, 3, axis=2) if ch == 1 else arr
-
-
-def encode_pnm(arr: np.ndarray) -> bytes:
-    """uint8 (H, W) → P5, (H, W, 3) → P6."""
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 3 and a.shape[2] == 1:
-        a = a[:, :, 0]
-    magic = b"P6" if a.ndim == 3 else b"P5"
-    h, w = a.shape[:2]
-    return magic + f"\n{w} {h}\n255\n".encode() + a.tobytes()
 
 
 # ----------------------------------------------------------------- TIFF
@@ -394,47 +307,6 @@ def _tiff_lzw(src: bytes) -> bytes:
             raise ValueError("TIFF: LZW code out of range")
         out += entry
         prev = entry
-
-
-def _tiff_lzw_encode(data: bytes) -> bytes:
-    """TIFF LZW writer (the ``_tiff_lzw`` inverse): MSB-first,
-    EarlyChange widths, clear at table entry 4094 per spec."""
-    table = {bytes([c]): c for c in range(256)}
-    next_code = 258
-    out = bytearray()
-    acc = 0
-    nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((acc >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    emit(256, _lzw_width(next_code))  # clear
-    prev = b""
-    for c in data:
-        cur = prev + bytes([c])
-        if cur in table:
-            prev = cur
-            continue
-        emit(table[prev], _lzw_width(next_code))
-        table[cur] = next_code
-        next_code += 1
-        prev = bytes([c])
-        if next_code == 4094:  # spec: clear before the table fills
-            emit(256, _lzw_width(next_code))
-            table = {bytes([k]): k for k in range(256)}
-            next_code = 258
-    if prev:
-        emit(table[prev], _lzw_width(next_code))
-        next_code += 1
-    emit(257, _lzw_width(next_code))
-    if nbits:
-        out.append((acc << (8 - nbits)) & 0xFF)
-    return bytes(out)
 
 
 def _packbits(src: bytes) -> bytes:
@@ -543,67 +415,6 @@ def _decode_tiff_jpeg(data: bytes, tags: dict) -> np.ndarray:
     return out[:h]
 
 
-def encode_tiff(arr: np.ndarray, compression: int = 1) -> bytes:
-    """uint8 (H, W) or (H, W, 3) → little-endian TIFF (one strip).
-    ``compression``: 1 = none, 5 = LZW, 7 = JPEG (a full interchange
-    stream in the strip — legal per TIFF-TN2, no JPEGTables needed),
-    8 = zlib deflate, 32773 = PackBits (all-literal runs — valid,
-    exercises the decode path)."""
-    import zlib
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 3 and a.shape[2] == 1:
-        a = a[:, :, 0]
-    h, w = a.shape[:2]
-    spp = 3 if a.ndim == 3 else 1
-    pixels = a.tobytes()
-    if compression == 8:
-        pixels = zlib.compress(pixels, 6)
-    elif compression == 5:
-        pixels = _tiff_lzw_encode(pixels)
-    elif compression == 7:
-        from .jpeg import encode_jpeg
-
-        pixels = encode_jpeg(a, quality=95)
-    elif compression == 32773:
-        enc = bytearray()
-        for i in range(0, len(pixels), 128):
-            chunk = pixels[i : i + 128]
-            enc += bytes([len(chunk) - 1]) + chunk
-        pixels = bytes(enc)
-    elif compression != 1:
-        raise ValueError(f"encode_tiff: compression {compression}")
-    # layout: header(8) + pixel data + BitsPerSample array + IFD
-    pix_off = 8
-    bps_off = pix_off + len(pixels)
-    ifd_off = bps_off + (2 * spp if spp > 1 else 0)
-    entries = []
-
-    def ent(tag, typ, count, value):
-        entries.append(struct.pack("<HHI", tag, typ, count)
-                       + struct.pack("<I", value))
-
-    ent(256, 4, 1, w)
-    ent(257, 4, 1, h)
-    if spp == 1:
-        ent(258, 3, 1, 8)
-    else:
-        ent(258, 3, 3, bps_off)
-    ent(259, 3, 1, compression)
-    # photometric: RGB=2 / gray=1; JPEG strips carry YCbCr (TN2) = 6
-    ent(262, 3, 1, (6 if compression == 7 else 2) if spp == 3 else 1)
-    ent(273, 4, 1, pix_off)        # strip offset
-    ent(277, 3, 1, spp)
-    ent(278, 4, 1, h)              # rows per strip
-    ent(279, 4, 1, len(pixels))    # strip byte count
-    ifd = (struct.pack("<H", len(entries)) + b"".join(entries)
-           + struct.pack("<I", 0))
-    out = b"II*\x00" + struct.pack("<I", ifd_off) + pixels
-    if spp > 1:
-        out += struct.pack("<HHH", 8, 8, 8)[: 2 * spp]
-    return out + ifd
-
-
 def make_tiff(width: int, height: int, big_endian: bool = False) -> bytes:
     """Minimal spec-shaped TIFF: header + one IFD carrying the two
     dimension tags (no strip data — probes only read the IFD)."""
@@ -687,23 +498,6 @@ def _dib_palette_bytes(dib: bytes) -> int:
     return 4 * (n_colors or (1 << bpp))
 
 
-def encode_ico(arr: np.ndarray) -> bytes:
-    """uint8 image → single-entry PNG-compressed ICO (the modern
-    favicon layout)."""
-    from .png import encode_png
-
-    a = np.asarray(arr, dtype=np.uint8)
-    if a.ndim == 2:
-        a = a[:, :, None]
-    h, w = a.shape[:2]
-    if w > 256 or h > 256:
-        raise ValueError("ICO entries are at most 256x256")
-    png_bytes = encode_png(a)
-    entry = bytes([w % 256, h % 256, 0, 0]) + struct.pack(
-        "<HHII", 1, 32, len(png_bytes), 22)
-    return b"\x00\x00\x01\x00\x01\x00" + entry + png_bytes
-
-
 # ----------------------------------------------------------------- WebP
 
 def probe_webp(data: bytes) -> Optional[dict]:
@@ -733,14 +527,3 @@ def probe_webp(data: bytes) -> Optional[dict]:
             return {"width": w, "height": h, "codec": "vp8x"}
         i += 8 + size + (size & 1)
     return None
-
-
-def make_webp_vp8l_header(width: int, height: int) -> bytes:
-    """Spec-shaped WebP wrapper with a VP8L signature + dimension bits
-    (no pixel stream — probes only; decode honestly needs libwebp)."""
-    bits = (width - 1) & 0x3FFF | (((height - 1) & 0x3FFF) << 14)
-    body = bytes([0x2F]) + bits.to_bytes(4, "little")
-    chunk = b"VP8L" + struct.pack("<I", len(body)) + body
-    if len(body) & 1:
-        chunk += b"\x00"
-    return b"RIFF" + struct.pack("<I", 4 + len(chunk)) + b"WEBP" + chunk

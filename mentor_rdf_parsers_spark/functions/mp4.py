@@ -26,11 +26,6 @@ from __future__ import annotations
 import struct
 from typing import Iterator, Optional
 
-_CONTAINERS = {
-    b"moov", b"trak", b"mdia", b"minf", b"stbl", b"dinf", b"edts",
-    b"mvex", b"moof", b"traf",
-}
-
 
 def is_mp4(data: bytes) -> bool:
     return len(data) >= 12 and data[4:8] == b"ftyp"

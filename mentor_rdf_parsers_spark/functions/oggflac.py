@@ -8,9 +8,8 @@ FLAC STREAMINFO block) — byte arithmetic, no codec. Feeds
 probe_media / extract_audio_features real durations for the remaining
 common audio containers.
 
-The test-fixture writers emit spec-shaped streams (valid page CRCs are
-not checked by the walker, matching a metadata probe's scope — the
-essence is never decoded).
+Page CRCs are not checked by the walker, matching a metadata probe's
+scope — the essence is never decoded.
 
 No reference-repo counterpart (task-brief multimodal requirement).
 """
@@ -105,60 +104,3 @@ def probe_flac(data: bytes) -> Optional[dict]:
         "channels": channels,
         "duration_ms": int(total * 1000 / rate),
     }
-
-
-# ----------------------------------------------------- test-fixture mux
-
-def _ogg_page(serial: int, seq: int, granule: int, body: bytes,
-              header_type: int = 0) -> bytes:
-    segs = []
-    n = len(body)
-    while True:
-        segs.append(min(n, 255))
-        n -= segs[-1]
-        if segs[-1] < 255:
-            break
-    hdr = (b"OggS\x00" + bytes([header_type])
-           + struct.pack("<qII", granule, serial, seq)
-           + b"\x00\x00\x00\x00"  # CRC left zero: probe never checks it
-           + bytes([len(segs)]) + bytes(segs))
-    return hdr + body
-
-
-def make_ogg_opus(duration_ms: int, channels: int = 2,
-                  pre_skip: int = 312) -> bytes:
-    """Spec-shaped Opus-in-Ogg stream: OpusHead page, OpusTags page,
-    one data page whose granule encodes the duration at 48 kHz."""
-    head = (b"OpusHead\x01" + bytes([channels])
-            + struct.pack("<H", pre_skip)
-            + struct.pack("<I", 48000) + b"\x00\x00\x00")
-    tags = b"OpusTags" + struct.pack("<I", 4) + b"test" + struct.pack("<I", 0)
-    granule = duration_ms * 48 + pre_skip
-    return (_ogg_page(7, 0, 0, head, 2)
-            + _ogg_page(7, 1, 0, tags)
-            + _ogg_page(7, 2, granule, bytes(40), 4))
-
-
-def make_ogg_vorbis(duration_ms: int, rate: int = 44100,
-                    channels: int = 2) -> bytes:
-    ident = (b"\x01vorbis" + struct.pack("<I", 0) + bytes([channels])
-             + struct.pack("<IiiI", rate, 0, 128000, 0)
-             + bytes([0xB8, 0x01]))
-    granule = duration_ms * rate // 1000
-    return (_ogg_page(9, 0, 0, ident, 2)
-            + _ogg_page(9, 1, granule, bytes(40), 4))
-
-
-def make_flac(duration_ms: int, rate: int = 44100,
-              channels: int = 2) -> bytes:
-    total = duration_ms * rate // 1000
-    si = bytearray(34)
-    si[0:2] = struct.pack(">H", 4096)   # min block size
-    si[2:4] = struct.pack(">H", 4096)   # max block size
-    si[10] = (rate >> 12) & 0xFF
-    si[11] = (rate >> 4) & 0xFF
-    si[12] = ((rate & 0x0F) << 4) | ((channels - 1) << 1)
-    si[13] = (15 << 4) | ((total >> 32) & 0x0F)  # bps-1=15 (16-bit)
-    si[14:18] = struct.pack(">I", total & 0xFFFFFFFF)
-    hdr = bytes([0x80]) + (34).to_bytes(3, "big")  # last block, type 0
-    return b"fLaC" + hdr + bytes(si)

@@ -17,8 +17,9 @@ from .textstats import token_count
 def _md5_bucket(col: Column, nibbles: int = 6) -> Column:
     """First `nibbles` hex chars of md5 → integer in [0, 16^nibbles).
 
-    Built from strpos arithmetic (like dedup.simhash32) so ANY SQL engine
-    reproduces it exactly — Spark's hash()/xxhash64 are not portable."""
+    Built from strpos arithmetic (like dedup.simhash_fingerprints) so ANY
+    SQL engine reproduces it exactly — Spark's hash()/xxhash64 are not
+    portable."""
     h = F.md5(col)
     acc = F.lit(0).cast("long")
     for i in range(nibbles):

@@ -24,9 +24,7 @@ from typing import Optional
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
-from .iterutil import cut, fixpoint
 from .linking import (
     minhash_candidate_pairs,
     normalize_key,
@@ -198,47 +196,16 @@ def _hex_nibble(c: Column) -> Column:
     return F.instr(F.lit("0123456789abcdef"), c) - 1
 
 
-def simhash32(text: Column) -> Column:
-    """32-bit SimHash over whitespace tokens.
-
-    bit b = sign( Σ_tokens (bit_b(md5(token)) ? +1 : -1) ) — computed
-    with array expressions (aggregate over transform), no explode, no
-    UDF: one pass per document, fully codegen'd.
-    """
-    toks = F.split(normalize_key(text), " ")
-
-    # per-token ±1 contribution for each bit, summed via aggregate
-    def contrib(tok: Column) -> Column:
-        h = F.md5(tok)
-        cols = []
-        for b in range(32):
-            nib = _hex_nibble(F.substring(h, 1 + b // 4, 1))
-            bit = F.floor(nib / (2 ** (b % 4))) % 2
-            cols.append((bit * 2 - 1).cast("long"))
-        return F.array(*cols)
-
-    sums = F.aggregate(
-        toks,
-        F.array_repeat(F.lit(0).cast("long"), 32),
-        lambda acc, t: F.zip_with(acc, contrib(t), lambda a, c: a + c),
-    )
-    weights = F.array(*[F.lit(2 ** b).cast("long") for b in range(32)])
-    return F.aggregate(
-        F.zip_with(sums, weights, lambda s, w: F.when(s > 0, w).otherwise(F.lit(0).cast("long"))),
-        F.lit(0).cast("long"),
-        lambda acc, x: acc + x,
-    )
-
-
 def simhash_fingerprints(
     df: DataFrame, id_col: str = "doc_id", text_col: str = "text",
 ) -> DataFrame:
     """(id, simhash) — one 32-bit fingerprint per non-null-text doc."""
-    # Explode-and-aggregate form of simhash32: the per-token md5 is
-    # materialized ONCE as a column, then 32 bit-sums aggregate map-side
-    # — the single-expression form re-evaluates the digest once per bit
-    # inside the fold lambda (no CSE in lambda bodies; same lesson as
-    # shingles_from_tokens). Identical values, one digest per token.
+    # bit b = sign( Σ_tokens (bit_b(md5(token)) ? +1 : -1) ) over the
+    # whitespace tokens. The per-token md5 is materialized ONCE as a
+    # column, then 32 bit-sums aggregate map-side — a single-expression
+    # fold over the token array would re-evaluate the digest once per
+    # bit inside the lambda (no CSE in lambda bodies; same lesson as
+    # shingles_from_tokens).
     # NULL text yields no fingerprint row (the pre-rewrite contract:
     # a null fingerprint was dropped by the bucket join; without this
     # filter explode_outer would hand such docs fingerprint 0 and bucket
@@ -344,10 +311,10 @@ def dedup_clusters(
     connected docs form one cluster; the minimum id is the kept
     representative.
 
-    The principled policy (vs :func:`dedup_keep_first`'s pairwise
-    heuristics): pairs (a,b),(b,c) put a,b,c in ONE cluster keeping only
-    a — chains neither over- nor under-drop. Runs the same Kiveris
-    large-star/small-star connected components as owl:sameAs
+    The package's one pair-resolution policy: pairs (a,b),(b,c) put
+    a,b,c in ONE cluster keeping only a — chains neither over- nor
+    under-drop, which no pairwise anti-join gets right. Runs the same
+    Kiveris large-star/small-star connected components as owl:sameAs
     canonicalization (O(log n) rounds at any chain depth — see
     operators/canonicalize.py), so the cost model is already proven at
     the 100 TB design point.
@@ -367,49 +334,3 @@ def dedup_clusters(
         .withColumn("keep", F.col("id") == F.col("component"))
     )
 
-
-def dedup_keep_first(
-    df: DataFrame, pairs: DataFrame, id_col: str = "doc_id",
-    exact: bool = False, max_iter: int = 20,
-) -> DataFrame:
-    """Resolve near-dup pairs (a < b) into a keep/drop decision.
-
-    Default (``exact=False``): drop every id that appears as the
-    dominated ``b`` side of ANY pair — one anti-join, the cheapest
-    web-scale policy. Note it over-drops on chains: with pairs (a,b),
-    (b,c) it drops c even though c's only dominator b was itself
-    dropped.
-
-    ``exact=True``: the true keep-first greedy — an id is dropped only
-    if dominated by a SURVIVING id — computed by topological peeling
-    (round k keeps the ids whose every remaining dominator is gone,
-    then discards their dominated neighbors). Each peel is a step
-    function for :func:`iterutil.fixpoint` over the dropped-id set, which
-    only grows until no pair is left; rounds ∝ longest domination
-    chain, near-dup clusters are shallow in practice, and a chain
-    deeper than ``max_iter`` raises.
-    """
-    if not exact:
-        drops = pairs.select(F.col("b").alias(id_col)).distinct()
-        return df.join(drops, id_col, "left_anti")
-
-    p, _ = cut(pairs.select("a", "b").where(F.col("a") < F.col("b")).distinct())
-
-    def step(dropped: DataFrame) -> DataFrame:
-        # dropped ids neither dominate nor need re-deciding
-        live = (
-            p.join(dropped.withColumnRenamed("id", "a"), "a", "left_anti")
-            .join(dropped.withColumnRenamed("id", "b"), "b", "left_anti")
-        )
-        # roots: ids never appearing as b in the remaining pair set are
-        # certain survivors; everything they dominate is dropped
-        roots = live.select(F.col("a").alias("id")).distinct().join(
-            live.select(F.col("b").alias("id")).distinct(), "id", "left_anti"
-        )
-        newly = live.join(roots.withColumnRenamed("id", "a"), "a").select(
-            F.col("b").alias("id"))
-        return dropped.union(newly).distinct()
-
-    dropped = fixpoint("dedup_keep_first", p.select(F.col("b").alias("id")).limit(0),
-                       step, max_iter)
-    return df.join(dropped.withColumnRenamed("id", id_col), id_col, "left_anti")

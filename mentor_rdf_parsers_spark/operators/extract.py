@@ -38,8 +38,6 @@ from ..parsing.turtle import parse_turtle
 from ..parsing.terms import quad_to_row
 from ..schemas import EXTRACT, EXTRACT_COLS, ERROR_COLS, TRIPLE_COLS
 
-_N_TRIPLE_COLS = len(TRIPLE_COLS)
-
 
 def _parse_one(syntax: str, text: str, bnode_gen, skolem_prefix: Optional[str], strict: bool):
     if syntax == "ntriples":

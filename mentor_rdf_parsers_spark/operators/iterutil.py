@@ -1,5 +1,5 @@
 """One fixpoint loop for the iterative operators (CC, transitive closure,
-forward chaining, exact keep-first; PageRank uses ``cut`` only).
+forward chaining; PageRank uses ``cut`` only).
 
 Catalyst has no recursion, so each operator is a *step function*
 ``state → state`` over one DataFrame and :func:`fixpoint` runs the

@@ -59,9 +59,9 @@ def link_exact(
 
 def tokens_of(col: Column) -> Column:
     """Normalized word tokens of a text column — project this into its
-    own column BEFORE shingling wide n-grams: `shingle_tokens` inlines
-    the split n times (once per gram position), and Catalyst's lambda
-    bodies get no subexpression elimination, so an 8-gram otherwise
+    own column BEFORE shingling wide n-grams: :func:`shingles_from_tokens`
+    references the array n times (once per gram position), and Catalyst's
+    lambda bodies get no subexpression elimination, so an 8-gram otherwise
     re-tokenizes every document 8×. A separate non-cheap multi-referenced
     projection survives CollapseProject and is computed once per row."""
     return F.split(normalize_key(col), " ")
@@ -75,15 +75,6 @@ def shingles_from_tokens(toks: Column, n: int = 3) -> Column:
         lambda i: F.concat_ws(" ", *[F.element_at(toks, i + j) for j in range(n)]),
     )
     return F.when(count >= 1, grams).otherwise(F.array().cast("array<string>"))
-
-
-def shingle_tokens(col: Column, n: int = 3) -> Column:
-    """Word n-gram shingles of a text column (built-in functions only —
-    `transform` over `sequence`, no UDF). Empty/short docs → empty array.
-
-    NOTE: inlines tokenization once per gram position; for hot paths
-    project :func:`tokens_of` first and use :func:`shingles_from_tokens`."""
-    return shingles_from_tokens(tokens_of(col), n)
 
 
 # Kirsch-Mitzenmacher double hashing for the md5 (cross-engine) minhash

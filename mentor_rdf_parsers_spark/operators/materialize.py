@@ -83,14 +83,13 @@ def write_stage(
     base_dir: str,
     stage: str = "triples",
     n_buckets: int = 64,
-    repartition_by_bucket: bool = True,
-    skip_if_complete: bool = True,
     write_salt: int = 0,
-) -> bool:
-    """Materialize a triples stage idempotently.
+) -> None:
+    """Materialize a triples stage, overwriting any earlier output.
 
-    Returns False if the stage output already existed (resume path).
-    Layout: `{base}/{stage}/s_bucket=K/part-*.parquet` + a sibling
+    The resume decision is the caller's: ``pipeline.run_pipeline``
+    checks :func:`stage_complete` before each stage. Layout:
+    `{base}/{stage}/s_bucket=K/part-*.parquet` + a sibling
     `{base}/{stage}_metrics/` lineage table (one row per `s_bucket`,
     aggregated from the frame cached for the write; the cache is
     released before returning). The bucket partition column
@@ -99,24 +98,21 @@ def write_stage(
     `writeTo(...).partitionedBy(bucket(N, col('s')))` swap.
     """
     out = os.path.join(base_dir, stage)
-    if skip_if_complete and stage_complete(base_dir, stage):
-        return False
     bucketed = with_subject_bucket(triples, n_buckets)
-    if repartition_by_bucket:
-        if write_salt > 1:
-            # hub-entity skew (north_rule): one hot subject would land an
-            # entire bucket on one writer task — salt the shuffle so each
-            # bucket spreads over `write_salt` tasks; the directory layout
-            # (s_bucket=K) and read-side pruning are unchanged.
-            # explicit partition count: AQE must not coalesce the salt
-            # spread away (it respects user-specified repartition(n))
-            bucketed = bucketed.repartition(
-                n_buckets * write_salt,
-                F.col("s_bucket"),
-                F.pmod(F.xxhash64("s", "p", "o"), F.lit(write_salt)),
-            )
-        else:
-            bucketed = bucketed.repartition("s_bucket")
+    if write_salt > 1:
+        # hub-entity skew (north_rule): one hot subject would land an
+        # entire bucket on one writer task — salt the shuffle so each
+        # bucket spreads over `write_salt` tasks; the directory layout
+        # (s_bucket=K) and read-side pruning are unchanged.
+        # explicit partition count: AQE must not coalesce the salt
+        # spread away (it respects user-specified repartition(n))
+        bucketed = bucketed.repartition(
+            n_buckets * write_salt,
+            F.col("s_bucket"),
+            F.pmod(F.xxhash64("s", "p", "o"), F.lit(write_salt)),
+        )
+    else:
+        bucketed = bucketed.repartition("s_bucket")
     bucketed = bucketed.persist()
     try:
         bucketed.write.mode("overwrite").partitionBy("s_bucket").parquet(out)
@@ -124,7 +120,6 @@ def write_stage(
         metrics.write.mode("overwrite").parquet(os.path.join(base_dir, stage + "_metrics"))
     finally:
         bucketed.unpersist()
-    return True
 
 
 def read_stage(spark: SparkSession, base_dir: str, stage: str = "triples") -> DataFrame:

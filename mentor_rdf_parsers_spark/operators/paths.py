@@ -51,24 +51,6 @@ def transitive_closure(
                     step, max_iter, checkpoint_dir)
 
 
-def path_sequence(left: DataFrame, right: DataFrame) -> DataFrame:
-    """`p1/p2` sequence path: join on the middle node."""
-    return (
-        left.alias("a")
-        .join(right.alias("b"), F.col("a.dst") == F.col("b.src"))
-        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-        .distinct()
-    )
-
-
-def path_alternative(*paths: DataFrame) -> DataFrame:
-    """`p1|p2` alternative path: union."""
-    out = paths[0]
-    for p in paths[1:]:
-        out = out.union(p)
-    return out.distinct()
-
-
 def pagerank(
     edges: DataFrame,
     iterations: int = 3,

@@ -33,17 +33,13 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
-
-
 def cosine_prenorm(a: Column, b: Column, na: Column, nb: Column) -> Column:
     """Cosine with per-row precomputed norms. The pairwise join paths
-    use this: `cosine()` inlines both norm aggregates into every
-    candidate pair (3 array folds per pair), while the norm of each
-    vector is a per-row property — precompute it as a column on each
-    side before the join and each pair costs ONE fold (the dot).
-    Identical float math, identical values."""
+    use this: `dot(a, b) / (norm(a) * norm(b))` would inline both norm
+    aggregates into every candidate pair (3 array folds per pair),
+    while the norm of each vector is a per-row property — precompute
+    it as a column on each side before the join and each pair costs
+    ONE fold (the dot)."""
     return dot(a, b) / (na * nb)
 
 

@@ -19,7 +19,6 @@ from typing import List, Optional, Tuple
 
 from .terms import Term
 
-_WS = re.compile(r"\s+")
 _VERSION = re.compile(r"^VERSION\s+", re.I)
 _BNODE_CHAR = re.compile(r"[a-zA-Z0-9_.\-]")
 

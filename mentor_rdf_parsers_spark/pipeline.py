@@ -33,23 +33,6 @@ Stage layout under `out_dir`:
     canonical/          owl:sameAs-collapsed, deduplicated graph
     canonical_metrics/
     media_meta/         metadata of the interleaved media spans
-
-Document-level near-dup policy (when wiring operators.dedup ahead of
-extract): `dedup_clusters(docs, pairs)` is the one the entry-point
-queries use (`__spark_entry__.q_dedup_clusters`) — transitively paired
-documents form one cluster (connected components) and only its min id
-is kept. `dedup_keep_first(pairs)` is the cheaper pairwise alternative:
-it drops every id appearing as the dominated `b` side of any pair,
-which over-drops on chains (pairs (a,b),(b,c) drop BOTH b and c even
-though c's only dominator b was itself dropped); `exact=True` gives the
-true greedy keep-first (only ids dominated by a *surviving* id are
-dropped; iterative topological peel, rounds ∝ domination-chain depth).
-All three behaviors are chain-tested (tests/test_pipeline_operators.py).
-
-When generating the near-dup pairs, pass ``max_doc_freq="auto"`` to
-``ngram_jaccard_pairs`` / ``dedup_minhash_lsh`` — the corpus-relative
-cap (operators/dedup.py:auto_doc_freq_cap) that bounds the shingle
-self-join at web scale without emptying documents.
 """
 
 from __future__ import annotations

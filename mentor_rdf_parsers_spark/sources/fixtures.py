@@ -150,6 +150,8 @@ def load_fixture_documents(
     partitions: Optional[int] = None,
 ) -> DataFrame:
     rows = list(fixture_documents_rows(syntaxes, replicate, include_negative))
+    if not rows:
+        raise ValueError(f"no fixture documents under {REFERENCE_TESTS}")
     df = spark.createDataFrame(rows, schema=DOCUMENTS)
     if partitions:
         df = df.repartition(partitions, "doc_id")

@@ -1293,8 +1293,7 @@ class Executor:
         if form == "ask":
             inner = Executor(self.triples, self.spark)
             df = inner._compile_pattern(q["where"], None)
-            has = df.limit(1).count() > 0
-            return self.spark.createDataFrame([(has,)], "ask boolean")
+            return df.limit(1).agg((F.count(F.lit(1)) > 0).alias("ask"))
         if form == "construct":
             df = self._compile_pattern(q["where"], None)
             outs = []

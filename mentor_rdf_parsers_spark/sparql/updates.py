@@ -16,6 +16,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..parsing.terms import quad_to_row
 from .executor import Executor, SparqlExecutionError
 from .parser import parse_sparql
 
@@ -62,28 +63,10 @@ def _parse_loaded(iri: str, body: str) -> list:
     return quads
 
 
-def _quad_rows(quads, doc_id: str = "update") -> list[tuple]:
-    rows = []
-    for (s, p, o, g) in quads:
-        if any(isinstance(t, tuple) and t[0] == "var" for t in (s, p, o, g or ("iri", ""))):
-            raise SparqlExecutionError("variables not allowed in DATA blocks")
-
-        def kind_val(t):
-            if t[0] == "literal":
-                return "literal", t[1], t[2], t[3]
-            return t[0], t[1], None, None
-
-        sk, sv, _, _ = kind_val(s)
-        pk, pv, _, _ = kind_val(p)
-        ok, ov, olang, odt = kind_val(o)
-        gk, gv = (g[0], g[1]) if g else (None, None)
-        rows.append((doc_id, sk, sv, pk, pv, ok, ov, olang, odt, gk, gv,
-                     None, None, None))
-    return rows
-
-
-def _quads_df(spark, quads, schema) -> DataFrame:
-    return spark.createDataFrame(_quad_rows(quads), schema)
+def _has_var(term) -> bool:
+    """A variable anywhere in a term, inside triple terms too."""
+    return term is not None and (
+        term[0] == "var" or term[0] == "tripleterm" and any(map(_has_var, term[1])))
 
 
 def _instantiate(ex: Executor, bindings: DataFrame, quads) -> DataFrame:
@@ -144,12 +127,20 @@ def execute_update(
     current = triples
     for op in parsed["operations"]:
         kind = op["op"]
-        if kind == "insertdata":
-            add = _quads_df(spark, op["quads"], current.schema)
-            current = current.unionByName(add).dropDuplicates(_KEY)
-        elif kind == "deletedata":
-            victims = _quads_df(spark, op["quads"], current.schema)
-            current = _remove(current, victims)
+        if kind in ("insertdata", "deletedata"):
+            # rows made by the same `quad_to_row` as extract and LOAD, so
+            # a stored term (a triple term's canonical string too) equals theirs
+            if any(_has_var(t) for q in op["quads"] for t in q):
+                raise SparqlExecutionError("variables not allowed in DATA blocks")
+            data = spark.createDataFrame(
+                [quad_to_row("update", s, p, o, g, None, None, None)
+                 for (s, p, o, g) in op["quads"]],
+                current.schema,
+            )
+            if kind == "insertdata":
+                current = current.unionByName(data).dropDuplicates(_KEY)
+            else:
+                current = _remove(current, data)
         elif kind == "deletewhere":
             # DELETE WHERE { QP } = DELETE { QP } WHERE { QP }: one group of
             # the default-graph triples plus one GRAPH node per graph
@@ -193,6 +184,10 @@ def execute_update(
                 ex = Executor(current, spark)
                 gctx = op["with"] if op["with"] else None
             bindings = ex._compile_pattern(op["where"], gctx)
+            # materialized once so the DELETE and INSERT templates read
+            # one solution sequence: a WHERE with a subselect LIMIT
+            # without ORDER BY, or with RAND()/UUID(), could give each
+            # template different solutions if evaluated twice
             bindings = bindings.persist()
             bindings.count()
             if op["delete"]:
@@ -256,8 +251,6 @@ def execute_update(
                 if op["silent"]:
                     continue
                 raise SparqlExecutionError(f"LOAD {iri} failed: {e}")
-            from ..parsing.terms import quad_to_row
-
             into = op["into"]  # None or ('iri', g): override destination graph
             rows = []
             for (s, p, o, g, s_off, p_off, o_off) in quads:

@@ -12,6 +12,7 @@ import numpy as np
 import pytest
 
 from mentor_rdf_parsers_spark.functions import ebml, jpeg, mp4, mpegaudio
+from tests import media_writers as mw
 
 
 def _frames(n=5, h=24, w=40):
@@ -324,25 +325,24 @@ class TestG711AndFloatWav:
 
         sig = self._sig()
         mu = g711.decode_mulaw(
-            np.frombuffer(g711.encode_mulaw(sig), np.uint8))
+            np.frombuffer(mw.encode_mulaw(sig), np.uint8))
         al = g711.decode_alaw(
-            np.frombuffer(g711.encode_alaw(sig), np.uint8))
+            np.frombuffer(mw.encode_alaw(sig), np.uint8))
         assert float(np.abs(mu - sig).max()) < 0.02
         assert float(np.abs(al - sig).max()) < 0.02
 
     def test_wav_ext_decode_paths(self):
-        from mentor_rdf_parsers_spark.functions import g711
         from mentor_rdf_parsers_spark.operators.multimodal import (
             _try_decode_audio,
         )
 
         sig = self._sig()
         cases = [
-            (g711.make_wav(sig.astype("<f4").tobytes(), 3, 1, 8000, 32),
+            (mw.make_wav(sig.astype("<f4").tobytes(), 3, 1, 8000, 32),
              0.0),
-            (g711.make_wav(g711.encode_mulaw(np.repeat(sig, 2)), 7, 2,
-                           8000, 8), 0.02),
-            (g711.make_wav(g711.encode_alaw(sig), 6, 1, 8000, 8), 0.02),
+            (mw.make_wav(mw.encode_mulaw(np.repeat(sig, 2)), 7, 2,
+                         8000, 8), 0.02),
+            (mw.make_wav(mw.encode_alaw(sig), 6, 1, 8000, 8), 0.02),
         ]
         for payload, tol in cases:
             got = _try_decode_audio(payload)
@@ -355,33 +355,32 @@ class TestG711AndFloatWav:
         from mentor_rdf_parsers_spark.functions import g711
 
         assert g711.decode_wav_ext(
-            g711.make_wav(b"\x00\x00" * 50, 1, 1, 8000, 16)) is None
+            mw.make_wav(b"\x00\x00" * 50, 1, 1, 8000, 16)) is None
 
 
 class TestOggFlac:
     def test_opus_duration(self):
         from mentor_rdf_parsers_spark.functions import oggflac
 
-        p = oggflac.probe_ogg(oggflac.make_ogg_opus(2500, channels=1))
+        p = oggflac.probe_ogg(mw.make_ogg_opus(2500, channels=1))
         assert p == {"codec": "opus", "sample_rate": 48000,
                      "channels": 1, "duration_ms": 2500}
 
     def test_vorbis_duration(self):
         from mentor_rdf_parsers_spark.functions import oggflac
 
-        p = oggflac.probe_ogg(oggflac.make_ogg_vorbis(1800, rate=22050))
+        p = oggflac.probe_ogg(mw.make_ogg_vorbis(1800, rate=22050))
         assert (p["codec"], p["sample_rate"], p["duration_ms"]) == (
             "vorbis", 22050, 1800)
 
     def test_flac_streaminfo(self):
         from mentor_rdf_parsers_spark.functions import oggflac
 
-        p = oggflac.probe_flac(oggflac.make_flac(3200, rate=48000))
+        p = oggflac.probe_flac(mw.make_flac(3200, rate=48000))
         assert (p["codec"], p["sample_rate"], p["duration_ms"]) == (
             "flac", 48000, 3200)
 
     def test_probe_and_audio_stage_dispatch(self, spark):
-        from mentor_rdf_parsers_spark.functions import oggflac
         from mentor_rdf_parsers_spark.operators.multimodal import (
             MEDIA,
             extract_audio_features,
@@ -389,8 +388,8 @@ class TestOggFlac:
         )
 
         rows = [
-            ("opus", "audio", bytearray(oggflac.make_ogg_opus(2500)), ""),
-            ("flac", "audio", bytearray(oggflac.make_flac(3200)), ""),
+            ("opus", "audio", bytearray(mw.make_ogg_opus(2500)), ""),
+            ("flac", "audio", bytearray(mw.make_flac(3200)), ""),
         ]
         df = spark.createDataFrame(rows, MEDIA)
         got = {r["media_id"]: r for r in probe_media(df).collect()}
@@ -423,10 +422,8 @@ class TestMalformedContainerRobustness:
             ebml.encode_mkv_mjpeg(frames, 5),
             mpegaudio.make_mp3(5),
             mpegaudio.make_adts(5),
-            __import__("mentor_rdf_parsers_spark.functions.oggflac",
-                       fromlist=["x"]).make_ogg_opus(1000),
-            __import__("mentor_rdf_parsers_spark.functions.oggflac",
-                       fromlist=["x"]).make_flac(1000),
+            mw.make_ogg_opus(1000),
+            mw.make_flac(1000),
         ]
         rng = np.random.default_rng(1)
         for p in payloads:

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from mentor_rdf_parsers_spark.functions import imagex
+from tests import media_writers as mw
 
 
 class TestBmp:
@@ -44,14 +45,14 @@ class TestBmpRle:
         idx = np.repeat(rng.integers(0, 200, (9, 11)), 3, axis=1).astype(np.uint8)
         idx[4] = rng.integers(0, 200, 33)  # one all-literal row
         pal = self._palette(200)
-        out = imagex.decode_bmp(imagex.encode_bmp_rle8(idx, pal))
+        out = imagex.decode_bmp(mw.encode_bmp_rle8(idx, pal))
         np.testing.assert_array_equal(out, pal[idx])
 
     def test_rle8_run_longer_than_255(self):
         idx = np.full((2, 300), 42, np.uint8)
         idx[1, :150] = 7
         pal = self._palette(64)
-        out = imagex.decode_bmp(imagex.encode_bmp_rle8(idx, pal))
+        out = imagex.decode_bmp(mw.encode_bmp_rle8(idx, pal))
         np.testing.assert_array_equal(out, pal[idx])
 
     def test_rle4_roundtrip(self):
@@ -59,7 +60,7 @@ class TestBmpRle:
         idx = rng.integers(0, 16, (7, 13)).astype(np.uint8)
         idx[2, :] = 5  # a solid row exercises the alternating-pair run
         pal = self._palette(16)
-        out = imagex.decode_bmp(imagex.encode_bmp_rle4(idx, pal))
+        out = imagex.decode_bmp(mw.encode_bmp_rle4(idx, pal))
         np.testing.assert_array_equal(out, pal[idx])
 
     def test_rle8_delta_and_early_eol_leave_zeros(self):
@@ -69,7 +70,7 @@ class TestBmpRle:
         body = bytes([3, 1, 0, 0,        # run, end of line
                       0, 2, 2, 1,        # delta dx=2 dy=1
                       2, 2, 0, 1])       # run, end of bitmap
-        hdr = imagex.encode_bmp_rle8(np.zeros((3, 4), np.uint8), pal)
+        hdr = mw.encode_bmp_rle8(np.zeros((3, 4), np.uint8), pal)
         pixel_off = int.from_bytes(hdr[10:14], "little")
         bmp = bytearray(hdr[:pixel_off]) + body
         import struct as _s
@@ -83,12 +84,12 @@ class TestBmpRle:
 
     def test_rle4_requires_small_indices(self):
         with pytest.raises(ValueError, match="< 16"):
-            imagex.encode_bmp_rle4(np.full((2, 2), 99, np.uint8),
-                                   self._palette(16))
+            mw.encode_bmp_rle4(np.full((2, 2), 99, np.uint8),
+                               self._palette(16))
 
     def test_rle_compression_bpp_mismatch_named(self):
         pal = self._palette(16)
-        raw = bytearray(imagex.encode_bmp_rle4(np.zeros((2, 2), np.uint8), pal))
+        raw = bytearray(mw.encode_bmp_rle4(np.zeros((2, 2), np.uint8), pal))
         import struct as _s
         _s.pack_into("<H", raw, 28, 8)  # claim 8bpp under BI_RLE4
         with pytest.raises(ValueError, match="BI_RLE4"):
@@ -120,7 +121,7 @@ class TestDecompressionBombs:
         import struct as _s
 
         pal = np.zeros((4, 3), np.uint8)
-        p = bytearray(imagex.encode_bmp_rle8(np.zeros((4, 4), np.uint8), pal))
+        p = bytearray(mw.encode_bmp_rle8(np.zeros((4, 4), np.uint8), pal))
         _s.pack_into("<ii", p, 18, 1 << 20, 1 << 20)  # 1Mx1M canvas
         with pytest.raises(ValueError, match="implausible"):
             imagex.decode_bmp(bytes(p))
@@ -128,7 +129,7 @@ class TestDecompressionBombs:
     def test_tiff_huge_dims_rejected(self):
         import struct as _s
 
-        p = bytearray(imagex.encode_tiff(np.zeros((4, 4), np.uint8), 5))
+        p = bytearray(mw.encode_tiff(np.zeros((4, 4), np.uint8), 5))
         # patch ImageWidth/ImageLength (tags 256/257) to 2^20 each
         parsed = imagex._tiff_ifd(bytes(p))
         assert parsed is not None
@@ -200,8 +201,8 @@ class TestBmpRleFuzz:
         rng = np.random.default_rng(21)
         idx8 = np.repeat(rng.integers(0, 9, (6, 8)), 2, axis=1).astype(np.uint8)
         pal = rng.integers(0, 256, (16, 3)).astype(np.uint8)
-        for p in (imagex.encode_bmp_rle8(idx8, pal),
-                  imagex.encode_bmp_rle4(idx8 % 16, pal)):
+        for p in (mw.encode_bmp_rle8(idx8, pal),
+                  mw.encode_bmp_rle4(idx8 % 16, pal)):
             for cut in range(1, len(p), max(1, len(p) // 40)):
                 try:
                     out = imagex.decode_bmp(p[:cut])
@@ -249,17 +250,17 @@ class TestPnm:
     def test_ppm_roundtrip_exact(self):
         rng = np.random.default_rng(4)
         img = rng.integers(0, 256, (17, 23, 3)).astype(np.uint8)
-        out = imagex.decode_pnm(imagex.encode_pnm(img))
+        out = imagex.decode_pnm(mw.encode_pnm(img))
         np.testing.assert_array_equal(out, img)
 
     def test_pgm_expands_to_rgb(self):
         g = np.arange(0, 120, dtype=np.uint8).reshape(8, 15)
-        out = imagex.decode_pnm(imagex.encode_pnm(g))
+        out = imagex.decode_pnm(mw.encode_pnm(g))
         np.testing.assert_array_equal(out, np.stack([g] * 3, axis=2))
 
     def test_comment_in_header(self):
         img = np.full((4, 6, 3), 9, np.uint8)
-        data = imagex.encode_pnm(img).replace(
+        data = mw.encode_pnm(img).replace(
             b"\n255\n", b"\n# a comment line\n255\n")
         np.testing.assert_array_equal(imagex.decode_pnm(data), img)
 
@@ -270,7 +271,7 @@ class TestPnm:
         )
 
         img = np.full((7, 11, 3), 3, np.uint8)
-        data = imagex.encode_pnm(img)
+        data = mw.encode_pnm(img)
         p = _probe_one(data)
         assert (p["container"], p["codec"], p["width"], p["height"]) == (
             "pnm", "ppm", 11, 7)
@@ -286,12 +287,12 @@ class TestTiffDecode:
     def test_uncompressed_rgb_roundtrip(self):
         rng = np.random.default_rng(8)
         img = rng.integers(0, 256, (19, 27, 3)).astype(np.uint8)
-        out = imagex.decode_tiff(imagex.encode_tiff(img))
+        out = imagex.decode_tiff(mw.encode_tiff(img))
         np.testing.assert_array_equal(out, img)
 
     def test_gray_expands(self):
         g = np.arange(0, 143, dtype=np.uint8).reshape(11, 13)
-        out = imagex.decode_tiff(imagex.encode_tiff(g))
+        out = imagex.decode_tiff(mw.encode_tiff(g))
         np.testing.assert_array_equal(out, np.stack([g] * 3, axis=2))
 
     def test_compressed_strips(self):
@@ -301,8 +302,7 @@ class TestTiffDecode:
         rng = np.random.default_rng(9)
         img = rng.integers(0, 256, (23, 31, 3)).astype(np.uint8)
         for comp in (5, 8, 32773):
-            out = imagex.decode_tiff(imagex.encode_tiff(img,
-                                                        compression=comp))
+            out = imagex.decode_tiff(mw.encode_tiff(img, compression=comp))
             np.testing.assert_array_equal(out, img)
         # PackBits repeat runs (the encoder only emits literals)
         assert imagex._packbits(bytes([0xFD, 7])) == bytes([7] * 4)
@@ -317,10 +317,10 @@ class TestTiffDecode:
             bytes(rng.integers(0, 256, 60000, dtype=np.uint8)),
             np.repeat(rng.integers(0, 8, 1500), 50).astype(np.uint8).tobytes(),
         ):
-            assert imagex._tiff_lzw(imagex._tiff_lzw_encode(data)) == data
+            assert imagex._tiff_lzw(mw.tiff_lzw_encode(data)) == data
 
     def test_oldstyle_jpeg_rejected_by_name(self):
-        data = bytearray(imagex.encode_tiff(np.zeros((4, 4), np.uint8)))
+        data = bytearray(mw.encode_tiff(np.zeros((4, 4), np.uint8)))
         # flip the Compression tag value (259) to 6 = old-style JPEG
         i = data.find(b"\x03\x01\x03\x00")  # tag 259, type SHORT (LE)
         data[i + 8] = 6
@@ -334,7 +334,7 @@ class TestTiffDecode:
 
         img = np.full((6, 9, 3), 77, np.uint8)
         np.testing.assert_array_equal(
-            _try_decode_image(imagex.encode_tiff(img)), img)
+            _try_decode_image(mw.encode_tiff(img)), img)
         # dimension-only fixture (no strips) falls through to the fake
         assert _try_decode_image(imagex.make_tiff(5, 6)) is None
 
@@ -427,7 +427,7 @@ class TestTiffJpeg:
 
     def test_full_stream_roundtrip(self):
         img = np.full((20, 28, 3), (40, 90, 200), np.uint8)
-        out = imagex.decode_tiff(imagex.encode_tiff(img, compression=7))
+        out = imagex.decode_tiff(mw.encode_tiff(img, compression=7))
         assert out.shape == img.shape
         assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 3
 
@@ -481,7 +481,7 @@ class TestTiffJpeg:
         )
 
         img = np.full((8, 8, 3), 160, np.uint8)
-        out = _try_decode_image(imagex.encode_tiff(img, compression=7))
+        out = _try_decode_image(mw.encode_tiff(img, compression=7))
         assert out is not None and out.shape == (8, 8, 3)
         assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 3
 
@@ -501,7 +501,7 @@ class TestTiffWebpProbes:
         assert imagex.probe_tiff(b"II*\x00" + b"\xff" * 4) is None
 
     def test_webp_vp8l(self):
-        p = imagex.probe_webp(imagex.make_webp_vp8l_header(320, 200))
+        p = imagex.probe_webp(mw.make_webp_vp8l_header(320, 200))
         assert p == {"width": 320, "height": 200, "codec": "vp8l"}
         assert imagex.probe_webp(b"RIFF\x04\x00\x00\x00AVI ") is None
 
@@ -515,7 +515,7 @@ class TestMultimodalDispatch:
         assert (p["container"], p["width"], p["height"]) == ("bmp", 30, 12)
         p = _probe_one(imagex.make_tiff(100, 60))
         assert (p["container"], p["width"], p["height"]) == ("tiff", 100, 60)
-        p = _probe_one(imagex.make_webp_vp8l_header(48, 32))
+        p = _probe_one(mw.make_webp_vp8l_header(48, 32))
         assert (p["container"], p["codec"], p["width"]) == (
             "webp", "vp8l", 48)
 
@@ -529,14 +529,14 @@ class TestMultimodalDispatch:
             _try_decode_image(imagex.encode_bmp(img)), img)
         # a header-only VP8L stream has no pixel data → falls to the
         # fake (real WebP decode is covered in tests/test_vp8l.py)
-        assert _try_decode_image(imagex.make_webp_vp8l_header(4, 4)) is None
+        assert _try_decode_image(mw.make_webp_vp8l_header(4, 4)) is None
 
 
 class TestIco:
     def test_png_entry_roundtrip(self):
         rng = np.random.default_rng(12)
         img = rng.integers(0, 256, (32, 48, 3)).astype(np.uint8)
-        ico = imagex.encode_ico(img)
+        ico = mw.encode_ico(img)
         assert imagex.probe_ico(ico) == {"width": 48, "height": 32,
                                          "n_frames": 1}
         np.testing.assert_array_equal(imagex.decode_ico(ico), img)
@@ -562,7 +562,7 @@ class TestIco:
         )
 
         img = np.full((16, 16, 3), 5, np.uint8)
-        ico = imagex.encode_ico(img)
+        ico = mw.encode_ico(img)
         p = _probe_one(ico)
         assert (p["container"], p["width"], p["height"]) == ("ico", 16, 16)
         np.testing.assert_array_equal(_try_decode_image(ico), img)

@@ -16,7 +16,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from mentor_rdf_parsers_spark.operators.canonicalize import connected_components
-from mentor_rdf_parsers_spark.operators.dedup import dedup_keep_first
 from mentor_rdf_parsers_spark.operators.iterutil import cut, fixed_plan
 from mentor_rdf_parsers_spark.operators.paths import transitive_closure
 from mentor_rdf_parsers_spark.operators.reasoning import forward_chain
@@ -150,10 +149,3 @@ def test_forward_chain_raises_when_exhausted(spark):
     out = forward_chain(t, max_iter=4, specialize=False)
     types = {r["o"] for r in out.where(F.col("s") == "http://ex/x").collect()}
     assert types == {f"http://ex/{c}" for c in "ABCD"}
-
-
-def test_dedup_keep_first_exact_raises_when_exhausted(spark):
-    ids = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
-    chain = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "a long, b long")
-    with pytest.raises(RuntimeError, match=r"dedup_keep_first.*max_iter=1"):
-        dedup_keep_first(ids, chain, exact=True, max_iter=1).collect()

@@ -15,7 +15,6 @@ from mentor_rdf_parsers_spark.operators.canonicalize import (
 )
 from mentor_rdf_parsers_spark.operators.dedup import (
     dedup_exact,
-    dedup_keep_first,
     dedup_minhash_lsh,
     dedup_simhash,
     ngram_jaccard_pairs,
@@ -37,8 +36,6 @@ from mentor_rdf_parsers_spark.operators.multimodal import (
     sample_frames,
 )
 from mentor_rdf_parsers_spark.operators.paths import (
-    path_alternative,
-    path_sequence,
     transitive_closure,
 )
 from mentor_rdf_parsers_spark.operators.similarity import (
@@ -234,26 +231,6 @@ def test_dedup_clusters_chain(spark):
     assert sorted(i for i in rows if rows[i]["keep"]) == [1, 5]
 
 
-def test_dedup_keep_first(spark, docs):
-    pairs = dedup_minhash_lsh(docs, min_jaccard=0.99)
-    kept = sorted(r["doc_id"] for r in dedup_keep_first(docs, pairs).collect())
-    assert kept == [1, 4, 5, 6]
-
-
-def test_dedup_keep_first_exact_chain(spark, docs):
-    # chain 1<2<3<4: greedy keeps 1, drops 2 (dominated by surviving 1),
-    # keeps 3 (its only dominator 2 was dropped), drops 4 (dominated by 3);
-    # the default fast mode over-drops every b side
-    ids = spark.createDataFrame([(i,) for i in range(1, 5)], "doc_id long")
-    chain = spark.createDataFrame([(1, 2), (2, 3), (3, 4)], "a long, b long")
-    fast = sorted(r["doc_id"] for r in dedup_keep_first(ids, chain).collect())
-    assert fast == [1]
-    exact = sorted(
-        r["doc_id"] for r in dedup_keep_first(ids, chain, exact=True).collect()
-    )
-    assert exact == [1, 3]
-
-
 # ---------------------------------------------------------------- textstats
 
 
@@ -326,15 +303,6 @@ def test_transitive_closure_chain(spark):
     closure = transitive_closure(edges)
     assert closure.count() == 65 * 64 // 2
     assert closure.where("src = 0").count() == 64
-
-
-def test_path_sequence_and_alternative(spark):
-    e1 = spark.createDataFrame([("a", "b")], "src string, dst string")
-    e2 = spark.createDataFrame([("b", "c")], "src string, dst string")
-    seq = path_sequence(e1, e2).collect()
-    assert [(r["src"], r["dst"]) for r in seq] == [("a", "c")]
-    alt = path_alternative(e1, e2)
-    assert alt.count() == 2
 
 
 # ---------------------------------------------------------------- multimodal
@@ -424,9 +392,7 @@ def test_write_stage_resume_and_metrics(spark, tmp_path):
             "g string, s_off int, p_off int, o_off int")
     t = spark.createDataFrame(rows, cols)
     base = str(tmp_path / "graph")
-    assert write_stage(t, base, "triples", n_buckets=8) is True
-    # resume: second call is a no-op
-    assert write_stage(t, base, "triples", n_buckets=8) is False
+    write_stage(t, base, "triples", n_buckets=8)
     back = read_stage(spark, base, "triples")
     assert back.count() == 100
     assert "s_bucket" in back.columns
@@ -592,7 +558,7 @@ def test_write_stage_salted(spark, tmp_path):
             "g string, s_off int, p_off int, o_off int")
     t = spark.createDataFrame(rows, cols)
     base = str(tmp_path / "salted")
-    assert write_stage(t, base, "triples", n_buckets=4, write_salt=4)
+    write_stage(t, base, "triples", n_buckets=4, write_salt=4)
     bucket_dirs = glob.glob(f"{base}/triples/s_bucket=*")
     assert len(bucket_dirs) == 1  # one subject → one bucket dir
     files = glob.glob(f"{bucket_dirs[0]}/part-*.parquet")

@@ -157,6 +157,20 @@ def test_corpus_precision_recall_gate(spark):
     assert pr["recall"] >= 0.95, pr
 
 
+def test_empty_reference_corpus_raises(spark, monkeypatch, tmp_path):
+    """With no reference files, the P/R gate and the fixture loader raise
+    instead of reporting on 0 documents."""
+    from mentor_rdf_parsers_spark import conformance
+    from mentor_rdf_parsers_spark.sources import fixtures
+
+    monkeypatch.setattr(conformance, "REF", tmp_path)
+    with pytest.raises(ValueError, match="no golden pairs"):
+        conformance.corpus_precision_recall(spark)
+    monkeypatch.setattr(fixtures, "REFERENCE_TESTS", str(tmp_path))
+    with pytest.raises(ValueError, match="no fixture documents"):
+        fixtures.load_fixture_documents(spark)
+
+
 def test_dedup_parse_cache_identical_output(spark, rdf_docs):
     """Content-addressed parse cache must be byte-identical to cold
     parsing, including skolemized bnode ids across replicated docs."""

@@ -4,8 +4,8 @@ the plan and on the Spark job log, not only on answers.
 - OPTIONAL followed by a join on the optional variable must keep an
   equi-join for the bound rows; only rows with the variable unbound may
   reach a nested-loop / cartesian join.
-- FILTER EXISTS without shared variables must stay lazy: compiling the
-  query starts no Spark job.
+- FILTER EXISTS without shared variables, and ASK, must stay lazy:
+  compiling the query starts no Spark job.
 - A subselect under GRAPH ?g applies its LIMIT/ORDER BY per graph.
 """
 
@@ -105,6 +105,19 @@ def test_unshared_exists_compiles_without_a_job(spark):
         df, jobs = _jobs_while(spark, lambda: execute(query, triples))
         assert jobs == [], query
         df.collect()  # the action still runs
+
+
+def test_ask_compiles_without_a_job(spark):
+    triples = to_df(spark, [(S_IRIS[0], P_IRIS[0], S_IRIS[1], G_IRIS[0])])
+    for where, want in (
+        ("?a <http://ex/p0> ?b", False),  # the only edge is in a named graph
+        ("GRAPH ?g { ?a <http://ex/p0> ?b }", True),
+        ("GRAPH ?g { ?a <http://ex/p1> ?b }", False),
+    ):
+        query = f"ASK {{ {where} }}"
+        df, jobs = _jobs_while(spark, lambda: execute(query, triples))
+        assert jobs == [], query
+        assert [tuple(r) for r in df.collect()] == [(want,)], query
 
 
 def test_graph_subselect_limit_is_per_graph(spark):

@@ -5,6 +5,9 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from mentor_rdf_parsers_spark.operators.extract import extract_triples, split_extract
+from mentor_rdf_parsers_spark.schemas import DOCUMENTS
+from mentor_rdf_parsers_spark.sparql.executor import SparqlExecutionError
 from mentor_rdf_parsers_spark.sparql.updates import execute_update
 
 PREFIX = "PREFIX : <http://ex/>\n"
@@ -40,6 +43,32 @@ def test_insert_and_delete_data(graph):
     out2 = execute_update(PREFIX + 'DELETE DATA { :a :p "1" }', out)
     assert ("http://ex/a", "http://ex/p", "1", None) not in facts(out2)
     assert out2.count() == out.count() - 1
+
+
+def test_data_triple_terms_match_extract(spark, graph):
+    """INSERT DATA stores an RDF 1.2 triple term, bare `<<( … )>>` or
+    under a reifier `<< … ~ r >>`, as the row extract writes for the same
+    Turtle 1.2 statements; DELETE DATA of the same data removes it."""
+    body = ":x :p <<( :a :b :c )>> .\n:x :q << :a :b :c ~ :r >> .\n"
+    ttl = "@prefix : <http://ex/> .\n" + body
+    docs = spark.createDataFrame(
+        [("t", [("text", ttl, None, 0)], "turtle", None)], DOCUMENTS)
+    triples, _ = split_extract(extract_triples(docs, strict=True))
+    key = ["s_kind", "s", "p_kind", "p", "o_kind", "o", "o_lang", "o_dt", "g_kind", "g"]
+    want = sorted(tuple(r) for r in triples.select(key).collect())
+    assert [r[4:6] for r in want].count(("tripleterm", "<<( <http://ex/a> "
+                                         "<http://ex/b> <http://ex/c> )>>")) == 2
+    out = execute_update(PREFIX + f"INSERT DATA {{ {body} }}", graph)
+    got = out.where(F.col("doc_id") == "update").select(key).collect()
+    assert sorted(tuple(r) for r in got) == want
+    back = execute_update(PREFIX + f"DELETE DATA {{ {body} }}", out)
+    assert facts(back) == facts(graph)
+
+
+def test_data_blocks_reject_variables(graph):
+    for data in (":x :p ?o", ":x :p <<( ?s :b :c )>>"):
+        with pytest.raises(SparqlExecutionError, match="variables not allowed"):
+            execute_update(PREFIX + f"INSERT DATA {{ {data} }}", graph)
 
 
 def test_insert_data_into_named_graph(graph):
