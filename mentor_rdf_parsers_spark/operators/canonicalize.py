@@ -10,7 +10,7 @@ Algorithm: local contraction, then Kiveris large-star / small-star
 (connected_components).  Plain hash-min label propagation needs
 O(diameter) joins — a 1M-node alias chain would need 1M shuffles;
 alternating the two star operations converges in O(log n) rounds for
-any id order.  Each round is a step function run by
+any node order.  Each round is a step function run by
 ``iterutil.fixpoint``, which cuts lineage after every round
 (``localCheckpoint``, or reliable checkpoints under ``checkpoint_dir``
 for the north_rule's resumability — without a cut the plan doubles per
@@ -18,8 +18,8 @@ round and the driver OOMs long before 100 TB), stops when the edge set
 is unchanged and raises at ``max_iter``.
 
 Before the rounds, a ``mapInArrow`` kernel (:func:`_contract`) runs a
-vectorized numpy union-find over each partition's edges and replaces
-them by star edges node → min node of its local component.  That keeps
+vectorized union-find over each partition's edges and replaces them by
+star edges node → min node of its local component.  That keeps
 connectivity, so the components are the same, and it costs no Spark job
 of its own.  It helps as far as the partitions hold whole components.
 When every edge sits in one partition — AQE coalesces a small edge set
@@ -31,15 +31,18 @@ scattered input: with AQE off and 16 shuffle partitions a scrambled
 64-node chain still takes 6 rounds and a 4096-node chain 11, as without
 the kernel.
 
-The id → term map of :func:`canonicalize_triples` is built from the
-sameAs endpoints only, and a 64-bit hash collision between two of them
-fails the rewrite's own job instead of merging the two terms silently.
+:func:`canonicalize_triples` runs the components over the sameAs
+endpoint terms themselves.  The star operations and the kernel need
+only a total order, and under the string order (UTF-8 bytes, in Spark
+and Arrow alike) the component min is the representative term, so the
+converged star edges are the term → representative mapping: no node
+ids, no map back, and no two terms can share a key.
 
 Scale notes:
-* all joins are equi-joins on a long key → sort-merge/shuffle-hash under
-  AQE; the label table is (node, comp) longs only, so even 10^11 nodes
-  is ~1.6 TB shuffled — partition count should scale with input (caller
-  sets ``spark.sql.shuffle.partitions``).
+* all joins are equi-joins on the node key → sort-merge/shuffle-hash
+  under AQE; each round shuffles (node, comp) term strings, bounded by
+  the sameAs endpoints (not every term of the graph) — partition count
+  should scale with input (caller sets ``spark.sql.shuffle.partitions``).
 * hub entities (a node with millions of sameAs edges) contribute each
   neighbor once (edges deduplicated first), and the star operations
   bound neighborhood growth by construction; residual skew is handled
@@ -56,6 +59,7 @@ from typing import Iterator, Optional
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
@@ -64,45 +68,26 @@ from .iterutil import cut, fixpoint
 OWL_SAMEAS = "http://www.w3.org/2002/07/owl#sameAs"
 
 
-def _node_id(col: str) -> F.Column:
-    """Stable long node id of a term: xxhash64 of its string."""
-    return F.xxhash64(col)
-
-
-def _sameas(triples: DataFrame) -> DataFrame:
-    return triples.where(
-        (F.col("p") == OWL_SAMEAS) & F.col("o_kind").isin("iri", "bnode")
-    )
-
-
-def sameas_edges(triples: DataFrame) -> DataFrame:
-    """Extract owl:sameAs edges from a triples DataFrame as stable long
-    ids (:func:`_node_id` of the term); :func:`canonicalize_triples`
-    maps them back to terms."""
-    return _sameas(triples).select(
-        _node_id("s").alias("src"), _node_id("o").alias("dst")
-    )
-
-
 def _contract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """``mapInArrow`` kernel: one partition's (u, v) edges → star edges
     (u = node, v = min node of its component within the partition), one
-    per node that is not that min.
+    per node that is not that min. Any ordered Arrow type works: longs,
+    and strings in byte order, which is Spark's string order.
 
-    Vectorized union-find over the ``np.unique`` indices of the endpoints
-    (sorted, so the min index is the min id): every root hooks to the
-    smallest root across its edges (``np.minimum.at``), pointer jumping
-    then points every node at its root again, until each edge's ends
-    share a root. Hooks only ever point at a smaller index, so no cycle
-    forms and each component ends at its min."""
-    parts = [(b.column(0).to_numpy(), b.column(1).to_numpy()) for b in batches]
+    Vectorized union-find over the indices of the endpoints in their
+    sorted distinct values (``pc.unique`` + ``pc.sort_indices`` +
+    ``pc.index_in``, so the min index is the min node): every root hooks
+    to the smallest root across its edges (``np.minimum.at``), pointer
+    jumping then points every node at its root again, until each edge's
+    ends share a root. Hooks only ever point at a smaller index, so no
+    cycle forms and each component ends at its min."""
+    parts = [(b.column(0), b.column(1)) for b in batches]
     if not parts:
         return
-    nodes, ends = np.unique(
-        np.concatenate([u for u, _ in parts] + [v for _, v in parts]),
-        return_inverse=True,
-    )
-    a, b = np.split(ends, 2)
+    ends = pa.chunked_array([u for u, _ in parts] + [v for _, v in parts])
+    distinct = pc.unique(ends)
+    nodes = distinct.take(pc.sort_indices(distinct))
+    a, b = np.split(pc.index_in(ends, value_set=nodes).to_numpy(), 2)
     root = np.arange(len(nodes))
     while True:
         ra, rb = root[a], root[b]
@@ -116,9 +101,9 @@ def _contract(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
             if np.array_equal(up, root):
                 break
             root = up
-    moved = root != np.arange(len(nodes))
+    moved = np.flatnonzero(root != np.arange(len(nodes)))
     yield pa.RecordBatch.from_arrays(
-        [pa.array(nodes[moved]), pa.array(nodes[root[moved]])], names=["u", "v"]
+        [nodes.take(moved), nodes.take(root[moved])], names=["u", "v"]
     )
 
 
@@ -159,8 +144,9 @@ def connected_components(
     max_iter: int = 50,
     checkpoint_dir: Optional[str] = None,
 ) -> DataFrame:
-    """(src:long, dst:long) undirected edges → (node:long, comp:long)
-    where comp = min node id of the component.
+    """(src, dst) undirected edges → (node, comp) where comp = min node
+    of the component. Nodes may be of any ordered type — long ids, or
+    term strings, whose min is then the lexicographically-min term.
 
     Each partition's deduplicated symmetric edges are first contracted
     to local star edges (:func:`_contract`); then alternating
@@ -186,7 +172,7 @@ def connected_components(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     ).where(F.col("u") != F.col("v")).distinct()
     parts = Observation()
-    local = sym.mapInArrow(_contract, "u long, v long").observe(
+    local = sym.mapInArrow(_contract, sym.schema).observe(
         parts,
         F.min(F.spark_partition_id()).alias("lo"),
         F.max(F.spark_partition_id()).alias("hi"),
@@ -209,45 +195,22 @@ def canonicalize_triples(
     representative (the lexicographically-min term of each owl:sameAs
     component), dropping the sameAs edges themselves and deduplicating.
 
-    Two-phase: (1) CC over :func:`_node_id` node ids, (2) pick min *term
-    string* per component as the representative (deterministic and
-    human-meaningful, unlike the hash), (3) broadcast-or-shuffle
-    map-side rewrite of s and o.  Only the sameAs endpoints are mapped
-    back from ids to terms; two endpoint terms sharing one id raise
-    (``raise_error`` in the same job) instead of merging.
+    Components run over the endpoint terms themselves, so the component
+    min *is* the representative and the mapping is the converged star
+    edges (node != comp); a broadcast-or-shuffle map-side join then
+    rewrites s and o.
     """
+    edges = triples.where(
+        (F.col("p") == OWL_SAMEAS) & F.col("o_kind").isin("iri", "bnode")
+    ).select(F.col("s").alias("src"), F.col("o").alias("dst"))
     comps = connected_components(
-        sameas_edges(triples), max_iter=max_iter, checkpoint_dir=checkpoint_dir
+        edges, max_iter=max_iter, checkpoint_dir=checkpoint_dir
     )
-
-    # node id → its one endpoint term → representative term
-    e = _sameas(triples)
-    ids = (
-        e.select(F.col("s").alias("term"))
-        .union(e.select(F.col("o").alias("term")))
-        .groupBy(_node_id("term").alias("node"))
-        .agg(F.min("term").alias("term"), F.max("term").alias("other"))
-        .select(
-            "node",
-            F.when(F.col("term") == F.col("other"), F.col("term")).otherwise(
-                F.raise_error(F.concat(
-                    F.lit("owl:sameAs node id collision: "),
-                    F.col("term"), F.lit(" / "), F.col("other"),
-                ))
-            ).alias("term"),
-        )
-    )
-    labeled = ids.join(comps, "node")
-    rep = labeled.groupBy("comp").agg(F.min("term").alias("rep"))
-    mapping = (
-        labeled.join(rep, "comp")
-        .where(F.col("term") != F.col("rep"))
-        .select("term", "rep")
-    )
+    mapping = comps.where(F.col("node") != F.col("comp"))
 
     out = triples.where(F.col("p") != OWL_SAMEAS)
-    m_s = mapping.select(F.col("term").alias("s"), F.col("rep").alias("s_rep"))
-    m_o = mapping.select(F.col("term").alias("o"), F.col("rep").alias("o_rep"))
+    m_s = mapping.select(F.col("node").alias("s"), F.col("comp").alias("s_rep"))
+    m_o = mapping.select(F.col("node").alias("o"), F.col("comp").alias("o_rep"))
     out = (
         out.join(m_s, "s", "left")
         .join(m_o, "o", "left")

@@ -16,7 +16,7 @@ from typing import Callable, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..parsing.terms import quad_to_row
+from ..parsing.terms import XSD_STRING, quad_to_row
 from .executor import Executor, SparqlExecutionError
 from .parser import parse_sparql
 
@@ -103,10 +103,20 @@ def _instantiate(ex: Executor, bindings: DataFrame, quads) -> DataFrame:
     return res.dropDuplicates(_KEY)
 
 
+def _match_key(df: DataFrame) -> list:
+    """``_KEY`` columns with a literal's missing datatype read as
+    xsd:string: ``"x"`` and ``"x"^^xsd:string`` are one RDF term, and
+    stored rows keep whichever spelling they have."""
+    plain = (df["o_kind"] == "literal") & df["o_lang"].isNull()
+    dt = F.when(plain, F.coalesce(df["o_dt"], F.lit(XSD_STRING))).otherwise(df["o_dt"])
+    return [dt if c == "o_dt" else df[c] for c in _KEY]
+
+
 def _remove(triples: DataFrame, victims: DataFrame) -> DataFrame:
+    victims = victims.select(_KEY).dropDuplicates()
     return triples.join(
-        victims.select(_KEY).dropDuplicates(),
-        on=[triples[c].eqNullSafe(victims[c]) for c in _KEY],
+        victims,
+        on=[a.eqNullSafe(b) for a, b in zip(_match_key(triples), _match_key(victims))],
         how="left_anti",
     )
 

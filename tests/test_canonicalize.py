@@ -1,15 +1,12 @@
 """owl:sameAs canonicalization: the per-partition union-find contraction
-ahead of the star rounds, and the node-id collision guard."""
+ahead of the star rounds, on long ids and on term strings, and the
+rewrite of every alias to its component's min term."""
 
 from __future__ import annotations
 
 import random
 
 import pyarrow as pa
-import pytest
-from py4j.protocol import Py4JJavaError
-from pyspark.errors import SparkRuntimeException
-from pyspark.sql import functions as F
 
 from mentor_rdf_parsers_spark.operators import canonicalize, iterutil
 from mentor_rdf_parsers_spark.operators.canonicalize import (
@@ -25,12 +22,13 @@ COLS = ("doc_id string, s_kind string, s string, p_kind string, p string, "
         "g string, s_off int, p_off int, o_off int")
 
 
-def _kernel(*batches):
-    """Run the kernel on edge-list batches; returns its (u, v) rows."""
+def _kernel(*batches, dtype=pa.int64()):
+    """Run the kernel on edge-list batches of ``dtype``; returns its (u, v)
+    rows."""
     arrow = [
         pa.RecordBatch.from_arrays(
-            [pa.array([u for u, _ in b], pa.int64()),
-             pa.array([v for _, v in b], pa.int64())],
+            [pa.array([u for u, _ in b], dtype),
+             pa.array([v for _, v in b], dtype)],
             names=["u", "v"],
         )
         for b in batches
@@ -59,14 +57,22 @@ def _union_find(edges) -> dict:
     return {x: find(x) for x in parent}
 
 
+def _term(i: int) -> str:
+    """A term string whose byte order is the order of ``i`` (0 ≤ i < 1000)."""
+    return f"urn:n{i:03d}"
+
+
 def test_contract_empty_partition():
-    assert _kernel() == []
-    assert _kernel([]) == []
+    for dtype in (pa.int64(), pa.string()):
+        assert _kernel(dtype=dtype) == []
+        assert _kernel([], dtype=dtype) == []
 
 
 def test_contract_duplicate_edges():
     # both directions, repeated, split over two batches
     assert _kernel([(7, 3), (3, 7), (7, 3)], [(3, 7), (9, 7)]) == [(7, 3), (9, 3)]
+    assert _kernel([("7", "3"), ("3", "7"), ("7", "3")], [("3", "7"), ("9", "7")],
+                   dtype=pa.string()) == [("7", "3"), ("9", "3")]
 
 
 def test_contract_descending_ids():
@@ -75,6 +81,9 @@ def test_contract_descending_ids():
     chain = [(i, i - 1) for i in range(100, 0, -1)]
     assert _kernel(chain) == [(i, 0) for i in range(1, 101)]
     assert _kernel([(5, 6), (40, 41), (6, 40)]) == [(6, 5), (40, 5), (41, 5)]
+    terms = [(_term(u), _term(v)) for u, v in chain]
+    assert _kernel(terms, dtype=pa.string()) == [
+        (_term(i), _term(0)) for i in range(1, 101)]
 
 
 def _count_cuts(monkeypatch) -> list:
@@ -110,21 +119,58 @@ def test_no_edges_need_no_round(spark, monkeypatch):
     assert len(cuts) == 1
 
 
-def test_canonicalize_raises_on_node_id_collision(spark, monkeypatch):
-    # ids collide by string length: urn:a / urn:c share one, and each
-    # sits in an edge with a term of another length; the fact about
-    # urn:a gives the rewrite something to map
-    monkeypatch.setattr(
-        canonicalize, "_node_id", lambda col: F.length(col).cast("long")
-    )
-    rows = [("d", "iri", s, "iri", p, "iri", o,
-             None, None, None, None, None, None, None)
-            for s, p, o in [("urn:a", canonicalize.OWL_SAMEAS, "urn:bb"),
-                            ("urn:c", canonicalize.OWL_SAMEAS, "urn:ddd"),
-                            ("urn:a", "urn:p", "urn:z")]]
-    t = spark.createDataFrame(rows, COLS)
-    # the error arrives bare, or wrapped when AQE fails both map-side
-    # stages that read the guarded id map at once
-    with pytest.raises((SparkRuntimeException, Py4JJavaError),
-                       match=r"node id collision: urn:a / urn:c"):
-        canonicalize_triples(t).collect()
+# the min of each component under UTF-8 byte (= code point) order, which
+# Arrow's sort, Spark's string compare and Python's min all use
+COMPONENTS = [
+    ["urn:é", "urn:z", "urn:ä"],  # ASCII z sorts below both accents
+    ["urn:😀", "urn:ｚ"],  # U+FF5A < U+1F600; UTF-16 order would pick 😀
+    ["urn:α", "b0", "urn:€"],  # a bnode label sorts below the IRIs
+]
+
+
+def test_string_components_agree_with_python_min(spark, monkeypatch):
+    pairs = [p for c in COMPONENTS for p in zip(c, c[1:])]
+    random.Random(5).shuffle(pairs)
+    edges = spark.createDataFrame(pairs, "src string, dst string")
+    expect = {t: min(c) for c in COMPONENTS for t in c}
+    assert _union_find(pairs) == expect
+    cuts = _count_cuts(monkeypatch)
+    # kernel only: one partition holds every edge
+    with _conf(spark, **{"spark.sql.shuffle.partitions": "1"}):
+        one = connected_components(edges, max_iter=1).collect()
+    assert {r["node"]: r["comp"] for r in one} == expect
+    assert len(cuts) == 1
+    # star rounds: the edges scatter over 16 partitions
+    with _conf(spark, **{"spark.sql.adaptive.enabled": "false",
+                         "spark.sql.shuffle.partitions": "16"}):
+        rounds = connected_components(edges).collect()
+    assert {r["node"]: r["comp"] for r in rounds} == expect
+    assert len(cuts) > 2
+
+
+def test_canonicalize_rewrites_scattered_chain_to_min_term(spark, monkeypatch):
+    # a scrambled 64-IRI alias chain plus two-node islands, scattered
+    # over 16 partitions so the string star rounds must run; each term
+    # has a fact as subject and as object
+    rng = random.Random(11)
+    chain = [f"http://e/{n}" for n in rng.sample(range(10**6), 64)]
+    pairs = list(zip(chain, chain[1:]))
+    pairs += [(f"http://i/{k}b", f"http://i/{k}a") for k in range(8)]
+    rng.shuffle(pairs)
+    rep = _union_find(pairs)
+    rows = [("d", "iri", s, "iri", canonicalize.OWL_SAMEAS, "iri", o)
+            for s, o in pairs]
+    rows += [("d", "iri", t, "iri", "urn:p", "iri", "urn:x") for t in rep]
+    rows += [("d", "iri", "urn:y", "iri", "urn:q", "iri", t) for t in rep]
+    t = spark.createDataFrame(
+        [r + (None,) * 7 for r in rows], COLS)
+    cuts = _count_cuts(monkeypatch)
+    with _conf(spark, **{"spark.sql.adaptive.enabled": "false",
+                         "spark.sql.shuffle.partitions": "16"}):
+        out = canonicalize_triples(t).collect()
+    assert len(cuts) > 1
+    assert sorted((r["s"], r["p"], r["o"]) for r in out) == sorted(
+        {(rep[t], "urn:p", "urn:x") for t in rep}
+        | {("urn:y", "urn:q", rep[t]) for t in rep})
+    assert set(rep.values()) == {min(chain)} | {
+        f"http://i/{k}a" for k in range(8)}

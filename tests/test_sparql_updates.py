@@ -45,6 +45,21 @@ def test_insert_and_delete_data(graph):
     assert out2.count() == out.count() - 1
 
 
+def test_delete_data_matches_either_xsd_string_spelling(graph):
+    # "x" and "x"^^xsd:string are one RDF term: whichever spelling is
+    # stored, DELETE DATA of the other removes it
+    xsd = "<http://www.w3.org/2001/XMLSchema#string>"
+    for stored, deleted in (('"x"', f'"x"^^{xsd}'), (f'"x"^^{xsd}', '"x"')):
+        g = execute_update(PREFIX + f"INSERT DATA {{ :s :q {stored} }}", graph)
+        assert g.count() == graph.count() + 1
+        out = execute_update(PREFIX + f"DELETE DATA {{ :s :q {deleted} }}", g)
+        assert facts(out) == facts(graph)
+    # a language-tagged literal is another term
+    g = execute_update(PREFIX + 'INSERT DATA { :s :q "x"@en }', graph)
+    out = execute_update(PREFIX + f'DELETE DATA {{ :s :q "x"^^{xsd} }}', g)
+    assert out.count() == g.count()
+
+
 def test_data_triple_terms_match_extract(spark, graph):
     """INSERT DATA stores an RDF 1.2 triple term, bare `<<( … )>>` or
     under a reifier `<< … ~ r >>`, as the row extract writes for the same
